@@ -12,7 +12,9 @@ import graft.functions.{AvroOrder, FromAvroOrder, FromAvroOrderV2, ToAvroOrder, 
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *
   * and `to_avro_order` / `from_avro_order` work in plain SQL across the
-  * cluster (the same functions `AvroOrder.register` adds per-session).
+  * cluster. The operators build the same expressions through their
+  * Column-level constructors (`ToAvroOrder(col)`, `Shingles(col, n)`,
+  * ...), so they need no per-session registration.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -78,9 +80,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case other => throw new IllegalArgumentException(
             s"l2sq(a, b) takes 2 args, got ${other.size}")
         }))
-    // Text/vector kernels with per-session register() helpers, also
-    // wired here so a spark.sql.extensions user gets the FULL SQL
-    // surface without any Scala call: shingles(text[, n]) (distinct
+    // Text/vector kernels, so a spark.sql.extensions user gets the FULL
+    // SQL surface without any Scala call: shingles(text[, n]) (distinct
     // word n-grams), shingles_all(text, n) (positional n-grams), and
     // cosine_sim(a, b) over float vectors.
     ext.injectFunction((

@@ -464,20 +464,13 @@ object ScaleNotch {
     val batch = scala.collection.mutable.LinkedHashMap
       .empty[String, Map[String, Map[String, Double]]]
     Seq("x1" -> baseSf, s"x$copies" -> synthDir).foreach { case (tag, dir) =>
-      // Targeted prebuild for just the chains under measurement (the
-      // full Indexes.prebuild also wants orders/lineitem, which the
-      // synth dir deliberately omits); each builder independent so one
-      // miss can't abort the rest.
-      Seq[(String, () => Any)](
-        "tokenIndex" -> (() => operators.TextAnalysis.tokenIndexPath(spark, dir)),
-        "ccLabels" -> (() => operators.Dedup.ccLabels(spark, dir)),
-        "docSets" -> (() => operators.Dedup.docSetsPath(spark, dir)),
-        "rankedIndex" -> (() => operators.Dedup.rankedIndexPath(spark, dir)),
-        "ivfIndex" -> (() => operators.Similarity.ivfIndexPath(spark, dir))
-      ).foreach { case (n, b) =>
-        try { b(); () }
+      // Every declared artifact, each independently: the synth dir
+      // deliberately omits orders/lineitem, so the artifacts built from
+      // those fail here (logged) without aborting the rest.
+      Indexes.declared.foreach { a =>
+        try a.path(spark, dir)
         catch { case e: Throwable =>
-          System.err.println(s"[notch] prebuild $n($dir): ${e.getMessage}")
+          System.err.println(s"[notch] prebuild ${a.name}($dir): ${e.getMessage}")
         }
       }
       chain.foreach { q =>

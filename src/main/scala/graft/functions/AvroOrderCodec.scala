@@ -7,7 +7,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWri
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
@@ -67,13 +67,7 @@ object AvroOrder {
     StructField("price", FloatType, nullable = true),
     StructField("timestamp", LongType, nullable = true)))
 
-  /** Register `to_avro_order` / `from_avro_order` SQL functions on a
-    * session so they are usable from `expr(...)` and `spark.sql(...)`.
-    */
-  /** SQL builder: coerce the struct argument to the exact Order shape
-    * (so e.g. an INT timestamp literal casts to LONG instead of failing
-    * deep in the encoder). */
-  /** Arity check shared by every registration path: a clear
+  /** Arity check shared by every SQL builder: a clear
     * wrong-number-of-arguments error instead of silently dropping extra
     * arguments or NoSuchElementException-ing on none. */
   def exactlyOne(name: String, args: Seq[Expression]): Expression = {
@@ -82,27 +76,14 @@ object AvroOrder {
     args.head
   }
 
+  /** SQL builder: coerce the struct argument to the exact Order shape
+    * (so e.g. an INT timestamp literal casts to LONG instead of failing
+    * deep in the encoder). */
   def toAvroBuilder(args: Seq[Expression]): Expression =
     ToAvroOrder(Cast(exactlyOne("to_avro_order", args), sparkType))
 
   def fromAvroBuilder(args: Seq[Expression]): Expression =
     FromAvroOrder(exactlyOne("from_avro_order", args))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    registry.createOrReplaceTempFunction(
-      "to_avro_order", toAvroBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "from_avro_order", fromAvroBuilder, "built-in")
-    registry.createOrReplaceTempFunction(
-      "try_from_avro_order",
-      (args: Seq[Expression]) =>
-        TryFromAvroOrder(exactlyOne("try_from_avro_order", args)), "built-in")
-    registry.createOrReplaceTempFunction(
-      "from_avro_order_v2",
-      (args: Seq[Expression]) =>
-        FromAvroOrderV2(exactlyOne("from_avro_order_v2", args)), "built-in")
-  }
 }
 
 /** struct<orderId,product,price,timestamp> → Avro binary. */
@@ -151,6 +132,12 @@ case class ToAvroOrder(child: Expression)
     copy(child = newChild)
 }
 
+object ToAvroOrder {
+  /** Column-level API: `to_avro_order(order)`. */
+  def apply(order: Column): Column =
+    GraftSqlShim.column(AvroOrder.toAvroBuilder(Seq(GraftSqlShim.expression(order))))
+}
+
 /** Avro binary → struct<orderId,product,price,timestamp>. */
 case class FromAvroOrder(child: Expression)
     extends UnaryExpression {
@@ -188,6 +175,12 @@ case class FromAvroOrder(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): FromAvroOrder =
     copy(child = newChild)
+}
+
+object FromAvroOrder {
+  /** Column-level API: `from_avro_order(bytes)`. */
+  def apply(bytes: Column): Column =
+    GraftSqlShim.column(FromAvroOrder(GraftSqlShim.expression(bytes)))
 }
 
 /** Schema-evolution decode: v1 binary payloads read under the v2 reader
@@ -232,6 +225,12 @@ case class FromAvroOrderV2(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): FromAvroOrderV2 =
     copy(child = newChild)
+}
+
+object FromAvroOrderV2 {
+  /** Column-level API: `from_avro_order_v2(bytes)`. */
+  def apply(bytes: Column): Column =
+    GraftSqlShim.column(FromAvroOrderV2(GraftSqlShim.expression(bytes)))
 }
 
 /** Permissive decode: corrupt/truncated Avro payloads yield NULL instead

@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -68,16 +68,9 @@ case class Shingles(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object Shingles {
-  /** Register `shingles(text[, n])` as a SQL function (default n=3). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles",
-      (args: Seq[Expression]) => args match {
-        case Seq(text) => Shingles(text, 3)
-        case Seq(text, nExpr) =>
-          Shingles(text, nExpr.eval().asInstanceOf[Number].intValue())
-      },
-      "built-in")
+  /** Column-level API: the distinct word `n`-grams of `text`. */
+  def apply(text: Column, n: Int): Column =
+    GraftSqlShim.column(Shingles(GraftSqlShim.expression(text), n))
 }
 
 /** `shingles_all(text, n)` — POSITIONAL word n-grams: element i of the
@@ -127,15 +120,7 @@ case class ShinglesAll(child: Expression, n: Int) extends UnaryExpression {
 }
 
 object ShinglesAll {
-  /** Register `shingles_all(text, n)` as a SQL function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingles_all",
-      (args: Seq[Expression]) => args match {
-        case Seq(text, nExpr) =>
-          ShinglesAll(text, nExpr.eval().asInstanceOf[Number].intValue())
-        case other => throw new IllegalArgumentException(
-          s"shingles_all(text, n) takes 2 args, got ${other.size}")
-      },
-      "built-in")
+  /** Column-level API: the positional word `n`-grams of `text`. */
+  def apply(text: Column, n: Int): Column =
+    GraftSqlShim.column(ShinglesAll(GraftSqlShim.expression(text), n))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.Shingles
 
 /** Round-2 breadth operators: the analytic-function suite, set
   * operations, banded time-range join, embedding quantization, corpus
@@ -156,10 +157,9 @@ object Analytics {
     * per-partition top-k, so the unpartitioned window only ever sees
     * 20 rows per upstream partition. */
   def topBigrams(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Shingles.register(spark)
     val w = Window.orderBy(col("df").desc, col("bigram"))
     Tables.documents(spark, dir)
-      .select(explode(expr("shingles(text, 2)")).as("bigram"))
+      .select(explode(Shingles(col("text"), 2)).as("bigram"))
       .groupBy("bigram").agg(count(lit(1)).as("df"))
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 20)
@@ -268,22 +268,12 @@ object Analytics {
     * and 2 (the [[snapshotDiff]] derivation) PUBLISHED as parquet under
     * a versioned root ([[graft.sources.SnapshotCatalog]]), built once
     * per corpus fingerprint like every persisted index. */
-  private val snapCatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-
-  /** Superseded corpus versions (r14 advice): `corpusCachedDir` deletes
-    * the evicted root's parquet tree along with its cache entry, so a
-    * JVM cycling corpus versions never leaks /tmp/graft-snapshots*. */
-  private[graft] def customerSnapshotRoot(spark: SparkSession,
-      dir: String): String =
-    graft.Indexes.corpusCachedDir(snapCatalogCache, dir) {
-      val r = java.nio.file.Files
-        .createTempDirectory("graft-snapshots").toFile.getAbsolutePath
+  private[graft] val CustomerSnapshots = graft.Indexes.Artifact("snapshots") {
+    (spark, dir, out) =>
       val v1 = customerV1(spark, dir)
-      graft.sources.SnapshotCatalog.publish(v1, r)
-      graft.sources.SnapshotCatalog.publish(customerV2(v1), r)
-      r
-    }
+      graft.sources.SnapshotCatalog.publish(v1, out)
+      graft.sources.SnapshotCatalog.publish(customerV2(v1), out)
+  }
 
   /** TIME TRAVEL — the read face of the snapshot surface: the SAME diff
     * as [[snapshotDiff]], but both versions come from the snapshot
@@ -297,7 +287,7 @@ object Analytics {
     * table-format snapshot log; reads cost one meta file + one listing
     * before the scan. */
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val root = customerSnapshotRoot(spark, dir)
+    val root = CustomerSnapshots.path(spark, dir)
     diffSnapshots(
       graft.sources.SnapshotCatalog.readAsOf(spark, root, 1),
       graft.sources.SnapshotCatalog.readAsOf(spark, root, 2))

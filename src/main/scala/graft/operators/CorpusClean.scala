@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.ShinglesAll
 
 /** Corpus-cleaning operators for LLM-training-data pipelines: exact
   * duplicated-span detection/removal (the "dedup at the substring
@@ -34,10 +35,9 @@ object CorpusClean {
   /** (doc_id, pos, sh) — every word 8-gram occurrence in the corpus,
     * positional and non-distinct, via the codegen'd `shingles_all`. */
   private def spanOccurrences(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShinglesAll.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
-        posexplode(expr(s"shingles_all(text, $SpanWords)")).as(Seq("pos", "sh")))
+        posexplode(ShinglesAll(col("text"), SpanWords)).as(Seq("pos", "sh")))
   }
 
   /** Every span occurrence carrying its corpus-wide repeat count —
@@ -183,14 +183,13 @@ object CorpusClean {
     * enumeration; at 100 TB the shingle is xxhash64-masked first and
     * served from the persisted span index (see class doc). */
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShinglesAll.register(spark)
     // Materialized once (r19): the distinct (source, shingle) set
     // feeds BOTH self-join sides and the per-source size aggregate —
     // un-checkpointed, the text scan + n-gram explode + distinct
     // shuffle ran three times.
     val sh = Tables.documents(spark, dir)
       .select(col("source"),
-        explode(expr(s"shingles_all(text, $SpanWords)")).as("sh"))
+        explode(ShinglesAll(col("text"), SpanWords)).as("sh"))
       .distinct()
       .localCheckpoint()
     val sizes = sh.groupBy("source").agg(count(lit(1)).as("n"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.OptimizerBarrier
+import graft.functions.{OptimizerBarrier, Shingles, ShinglesAll}
 
 /** Deduplication operators for LLM-training-data pipelines (SURVEY.md
   * §2.3 rows 31-34): exact hash dedup, n-gram Jaccard, MinHash+LSH,
@@ -41,9 +41,8 @@ object Dedup {
     * streams it out as rows.
     */
   private[graft] def shingleIndex(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Shingles.register(spark)
     Tables.documents(spark, dir)
-      .select(col("doc_id"), explode(expr("shingles(text)")).as("shingle"))
+      .select(col("doc_id"), explode(Shingles(col("text"), 3)).as("shingle"))
   }
 
   /** Write the (doc_id, shingle) inverted index to parquet once and
@@ -277,45 +276,31 @@ object Dedup {
     * pairs than the full-index join would. */
   /** Build-once per-corpus df-RANKED shingle index — the artifact BOTH
     * prefix-filter consumers (ppjoinPairs at τ=0.7, the threshold
-    * sweep at τ=0.5) serve from, persisted to parquet behind the same
-    * per-JVM path cache as the token/PQ/IVF indexes and forced untimed
-    * by [[graft.Indexes.prebuild]]. Unlike the single-consumer
+    * sweep at τ=0.5) serve from. Unlike the single-consumer
     * operators (which deliberately recompute their index — see
     * dedupMinhash), PPJoin reads the index from many plan branches
     * (both self-join sides, the verify's sets), and it is exactly the
     * (doc_id, shingle, rk, n_shingles) table a 100 TB corpus pipeline
     * materializes next to the data: the ranking windows run once per
     * ingest, every similarity-join threshold reads the same artifact. */
-  private val rankedIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def rankedIndexPath(spark: SparkSession, dir: String): String =
-    graft.Indexes.corpusCachedDir(rankedIndexCache, dir) {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-ppjoin-ranked").toFile.getAbsolutePath
+  private[graft] val RankedIndex = graft.Indexes.Artifact("ppjoin-ranked") {
+    (spark, dir, out) =>
       ppjoinRanked(shingleIndex(spark, dir)).write.mode("overwrite").parquet(out)
-      out
-    }
+  }
 
   /** The verify stage's companion artifact: per-doc SORTED shingle
     * arrays (the document-signature layout a 100 TB run stores next to
     * the corpus — see [[jaccardVerifySets]]), derived from the ranked
     * index with one groupBy at build time so no consumer re-shuffles
     * the index into arrays per query. */
-  private val docSetsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def docSetsPath(spark: SparkSession, dir: String): String =
-    graft.Indexes.corpusCachedDir(docSetsCache, dir) {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-doc-sets").toFile.getAbsolutePath
-      spark.read.parquet(rankedIndexPath(spark, dir))
+  private[graft] val DocSets = graft.Indexes.Artifact("doc-sets") {
+    (spark, dir, out) =>
+      spark.read.parquet(RankedIndex.path(spark, dir))
         .groupBy("doc_id")
         .agg(sort_array(collect_list(col("shingle"))).as("sh"),
           count(lit(1)).as("n_shingles"))
         .write.mode("overwrite").parquet(out)
-      out
-    }
+  }
 
   def ppjoinPairs(spark: SparkSession, dir: String): DataFrame = {
     // Candidate pass: the symmetric count-filtered join — at τ=0.7 on
@@ -324,9 +309,9 @@ object Dedup {
     // what the asymmetric trick can't have: its index prefix makes the
     // bound vacuous). The asymmetric pass stays spec-pinned as the
     // pruning baseline (`DedupScaleSpec`).
-    val ranked = spark.read.parquet(rankedIndexPath(spark, dir))
+    val ranked = spark.read.parquet(RankedIndex.path(spark, dir))
     jaccardVerifyFromSets(countFilteredCandidates(ranked, 7, 10),
-      spark.read.parquet(docSetsPath(spark, dir)))
+      spark.read.parquet(DocSets.path(spark, dir)))
       .filter(col("jaccard") >= 0.7)
   }
 
@@ -348,7 +333,7 @@ object Dedup {
           count(lit(1)).as("n_shingles")))
 
   /** Same verify over a PREBUILT (doc_id, sh sorted array, n_shingles)
-    * sets table — the persisted-artifact face ([[docSetsPath]]). */
+    * sets table — the persisted-artifact face ([[DocSets]]). */
   private def jaccardVerifyFromSets(candidates: DataFrame, sets: DataFrame): DataFrame = {
     candidates
       .join(sets.select(col("doc_id").as("doc_i"), col("sh").as("sh_i"),
@@ -522,7 +507,7 @@ object Dedup {
     * prefix shingles — rare-by-construction under the global
     * (df, shingle) order, the same reason PPJoin's prefixes bucket
     * small. Survivors verify on the persisted sorted-sets artifact
-    * ([[docSetsPath]]) with the codegen'd merge intersection; the
+    * ([[DocSets]]) with the codegen'd merge intersection; the
     * report rational is ONE exact floor-div in ppm.
     *
     * Scale shape: both passes serve from build-once persisted
@@ -531,7 +516,7 @@ object Dedup {
     * all-pairs product; ties (|A| = |B|) break by doc id so the
     * directional output replays engine-identically. */
   def containmentPairs(spark: SparkSession, dir: String): DataFrame = {
-    val ranked = spark.read.parquet(rankedIndexPath(spark, dir))
+    val ranked = spark.read.parquet(RankedIndex.path(spark, dir))
     // A-side prefix: n − ⌈t·n⌉ + 1 rarest shingles, exact int ceil;
     // α = ⌈t·n⌉ carried as a column for the B-side bound below.
     val prefix = ranked.filter(col("rk") <= col("n_shingles") -
@@ -570,7 +555,7 @@ object Dedup {
               col("a.doc_id") < col("b.doc_id"))))
       .select(col("a.doc_id").as("doc_small"), col("b.doc_id").as("doc_big"))
       .distinct()
-    val sets = spark.read.parquet(docSetsPath(spark, dir))
+    val sets = spark.read.parquet(DocSets.path(spark, dir))
     cands
       .join(sets.select(col("doc_id").as("doc_small"), col("sh").as("sh_s"),
         col("n_shingles").as("n_small")), "doc_small")
@@ -751,28 +736,20 @@ object Dedup {
     (labels, rounds)
   }
 
-  /** Corpus dir → persisted near-dup component labels (node, label),
-    * built at most once per JVM. The MinHash + CC fixpoint is
-    * index-BUILD work: the labels are the artifact a 100 TB pipeline
-    * persists next to the corpus, and every consumer — cluster stats,
-    * canonical picks, leakage-safe splits — serves from the parquet
-    * instead of re-running the iterative job (same cache discipline as
-    * the token/IVF/PQ indexes; the cache stores a path, so it is safe
-    * across SparkSessions in one JVM). */
-  private val ccLabelsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def ccLabels(spark: SparkSession, dir: String): DataFrame = {
-    val path = graft.Indexes.corpusCachedDir(ccLabelsCache, dir) {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-cc-labels").toFile.getAbsolutePath
+  /** Persisted near-dup component labels (node, label). The MinHash +
+    * CC fixpoint is index-BUILD work: the labels are the artifact a
+    * 100 TB pipeline persists next to the corpus, and every consumer —
+    * cluster stats, canonical picks, leakage-safe splits — serves from
+    * the parquet instead of re-running the iterative job. */
+  private[graft] val CcLabels = graft.Indexes.Artifact("cc-labels") {
+    (spark, dir, out) =>
       val (labels, _) = connectedComponents(
         dedupMinhash(spark, dir).select("doc_i", "doc_j"))
       labels.write.mode("overwrite").parquet(out)
-      out
-    }
-    spark.read.parquet(path)
   }
+
+  private[graft] def ccLabels(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(CcLabels.path(spark, dir))
 
   /** Duplicate clusters: connected components over the MinHash near-dup
     * pair graph — each doc ends up labeled with the smallest doc_id in
@@ -959,7 +936,7 @@ object Dedup {
     * Scale shape: both pair sets are CLUSTER-bounded (Σ|cluster|²
     * intra, |clusters| inter — never corpus²); labels and the sorted
     * shingle sets are the build-once persisted artifacts
-    * ([[ccLabels]], [[docSetsPath]]); the verify is the codegen'd
+    * ([[ccLabels]], [[DocSets]]); the verify is the codegen'd
     * sorted-merge intersection. The reps pairing is a distributed
     * exact-rank pass + rank-adjacency join (r19 — |clusters| is
     * corpus-sized at 100 TB, so the previous unpartitioned lead() was
@@ -967,7 +944,7 @@ object Dedup {
   def dedupEval(spark: SparkSession, dir: String): DataFrame = {
     val labels = ccLabels(spark, dir)
       .select(col("node").as("doc_id"), col("label").as("cluster_id"))
-    val sets = spark.read.parquet(docSetsPath(spark, dir))
+    val sets = spark.read.parquet(DocSets.path(spark, dir))
     val intra = labels.as("a")
       .join(labels.as("b"),
         col("a.cluster_id") === col("b.cluster_id") &&
@@ -1243,8 +1220,8 @@ object Dedup {
     * both out of the exact-integer discipline. One candidate join +
     * verify (the PPJoin cost class), then a 3-row rollup. */
   def lshTuning(spark: SparkSession, dir: String): DataFrame = {
-    val ranked = spark.read.parquet(rankedIndexPath(spark, dir))
-    val sets = spark.read.parquet(docSetsPath(spark, dir))
+    val ranked = spark.read.parquet(RankedIndex.path(spark, dir))
+    val sets = spark.read.parquet(DocSets.path(spark, dir))
     val pairs = countFilteredCandidates(ranked, 7, 10)
       .join(sets.select(col("doc_id").as("doc_i"), col("sh").as("sh_i"),
         col("n_shingles").as("ni")), "doc_i")
@@ -1347,7 +1324,7 @@ object Dedup {
   }
 
   /** Per-doc sorted-shingle-set table of an inverted index — the
-    * verify-side signature layout ([[docSetsPath]] persists the same
+    * verify-side signature layout ([[DocSets]] persists the same
     * shape corpus-wide). */
   private[graft] def docSetsOf(ex: DataFrame): DataFrame =
     ex.groupBy("doc_id")
@@ -1452,7 +1429,6 @@ object Dedup {
     * One explode + map-side-combined count-distinct pass per n, each
     * arm independent (no barrier). */
   def dupRateCurve(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShinglesAll.register(spark)
     // Measured NEGATIVE (r19): fusing the four arms into one scan
     // (per-row array of four tagged shingle arrays, double explode,
     // one groupBy(n) + countDistinct) A/B'd +28% against a DOWNWARD-
@@ -1463,7 +1439,7 @@ object Dedup {
     // four independent arms also parallelize as separate jobs.
     Seq(1, 2, 4, 8).map { n =>
       Tables.documents(spark, dir)
-        .select(explode(expr(s"shingles_all(text, $n)")).as("g"))
+        .select(explode(ShinglesAll(col("text"), n)).as("g"))
         .agg(count(lit(1)).as("total"),
           countDistinct(col("g")).as("n_distinct"))
         .select(lit(n).as("n"), col("total"), col("n_distinct"),
@@ -1549,7 +1525,7 @@ object Dedup {
       .partitionBy("doc_id").orderBy("pos").rowsBetween(0, WinnowW - 1)
     docs
       .select(col("doc_id"),
-        posexplode(expr(s"shingles_all(text, $WinnowK)")).as(Seq("pos", "sh")))
+        posexplode(ShinglesAll(col("text"), WinnowK)).as(Seq("pos", "sh")))
       .select(col("doc_id"), col("pos"),
         expr("CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT)").as("h"))
       .withColumn("m", min("h").over(w))
@@ -1563,7 +1539,6 @@ object Dedup {
     * hash ever meet — never n² pairs), aggregated to shared-fingerprint
     * counts with an exact micro-unit overlap estimate. */
   def winnowPairs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShinglesAll.register(spark)
     // Materialize the fingerprint set ONCE — it is consumed four ways
     // (both join sides, both size lookups), and without the cut each
     // branch re-runs the scan + gram hash + windows. At 100 TB this
@@ -1608,10 +1583,10 @@ object Dedup {
     * candidate volume tied to genuinely-rare shingle collisions. Serves
     * from the same persisted ranked index as [[ppjoinPairs]]. */
   def dedupThresholdSweep(spark: SparkSession, dir: String): DataFrame = {
-    val ranked = spark.read.parquet(rankedIndexPath(spark, dir))
+    val ranked = spark.read.parquet(RankedIndex.path(spark, dir))
     jaccardVerifyFromSets(
         countFilteredCandidates(ranked, tNum = 1, tDen = 2),
-        spark.read.parquet(docSetsPath(spark, dir)))
+        spark.read.parquet(DocSets.path(spark, dir)))
       .filter(col("jaccard") >= 0.5)
       .select(col("doc_j"), col("jaccard"),
         explode(array(Seq(50, 60, 70, 80, 90).map(lit(_)): _*)).as("tau_pct"))

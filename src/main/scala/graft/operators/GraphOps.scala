@@ -215,7 +215,7 @@ object GraphOps {
     // passes at every tested SF. The profile itself is a ≤7-row
     // driver-assembled literal table — the collected-bounded-artifact
     // discipline (BPE merge table precedent).
-    val e0 = spark.read.parquet(purchaseGraphPath(spark, dir))
+    val e0 = spark.read.parquet(PurchaseGraph.path(spark, dir))
     def degTable(live: Option[(DataFrame, DataFrame)]): DataFrame = {
       // The live sets are |nodes|-row filters of the checkpointed degree
       // table; the checkpoint's LogicalRDD carries no size stats, so
@@ -315,20 +315,22 @@ object GraphOps {
       seed: Long = 0L, maxHops: Int = BfsMaxHops): DataFrame = {
     import spark.implicits._
     val sparse = sparseTradeEdges(spark, dir)
+    // sparse is ≤ BfsTopLanes·|V| rows by construction, so its broadcast
+    // pin is bounded by the schema. The reached side grows toward |V|;
+    // every reached node but the seed is some edge's dst, so
+    // |reached| ≤ |sparse| + 1. Its pin, which lets the optimizer push
+    // the anti join into the broadcast edge side, holds only while that
+    // bound fits a broadcast (16 B per single-long row, as Spark sizes
+    // it); above it the anti join is left to AQE.
+    val pinReached = (sparse.count() + 1) * 16 <=
+      spark.sessionState.conf.autoBroadcastJoinThreshold
     var reached = Seq((seed, 0)).toDF("node", "hops").localCheckpoint()
     for (t <- 1 to maxHops) {
-      // r18 broadcast pinning: sparse is ≤ BfsTopLanes·|V| rows by
-      // construction and reached ≤ |V|; both checkpointed (stats-less)
-      // sides otherwise sort-merge per hop. VALIDITY CEILING (r18
-      // advice): the reached pin — unlike the schema-bounded sparse
-      // side — grows toward |V|, so it holds only while |V| fits a
-      // broadcast (|V| = |nations| = 25 at this face; at the
-      // 10⁹-node near-dup-graph scale the anti join side reverts to
-      // AQE like the pageRank loop).
+      val seen = reached.select("node")
       val frontier = reached.filter(col("hops") === t - 1)
       val next = frontier.join(broadcast(sparse), col("node") === col("src"))
         .select(col("dst").as("node")).distinct()
-        .join(broadcast(reached.select("node")), Seq("node"), "left_anti")
+        .join(if (pinReached) broadcast(seen) else seen, Seq("node"), "left_anti")
         .withColumn("hops", lit(t))
       val merged = reached.unionAll(next)
       graft.PlanAudit.loopBody("bfsHops hop", merged)
@@ -337,23 +339,16 @@ object GraphOps {
     reached
   }
 
-  /** Corpus dir → persisted distinct customer–part purchase-graph
-    * parquet, built at most once per JVM (see [[graft.Indexes]]). */
-  private val purchaseGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def purchaseGraphPath(spark: SparkSession, dir: String): String =
-    graft.Indexes.corpusCachedDir(purchaseGraphCache, dir) {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-purchase-graph").toFile.getAbsolutePath
+  /** Persisted distinct customer–part purchase graph (c, p). */
+  private[graft] val PurchaseGraph = graft.Indexes.Artifact("purchase-graph") {
+    (spark, dir, out) =>
       Tables.lineitem(spark, dir).select("l_orderkey", "l_partkey")
         .join(Tables.orders(spark, dir).select("o_orderkey", "o_custkey"),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
         .distinct()
-        .write.mode("overwrite").parquet(path)
-      path
-    }
+        .write.mode("overwrite").parquet(out)
+  }
 
   /** Depth bound for [[walkCounts]] — keeps the recursion Σ 25^k. */
   val WalkMaxLen = 3
@@ -623,7 +618,7 @@ object GraphOps {
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
     // Namespace the bipartite sides (2c / 2p+1): customer 5 and part 5
     // are different nodes and must not merge under one degree count.
-    val e = spark.read.parquet(purchaseGraphPath(spark, dir))
+    val e = spark.read.parquet(PurchaseGraph.path(spark, dir))
       .select(expr("c * 2").as("u"), expr("p * 2 + 1").as("v"))
     val both = e.union(e.select(col("v").as("u"), col("u").as("v")))
     val deg = both.groupBy("u").agg(count(lit(1)).as("d"))
@@ -651,7 +646,7 @@ object GraphOps {
     * doclen-histogram trick), per side of the bipartite graph.
     * Bounded output (≤ ~33 buckets × 2 sides) at any scale. */
   def degreeHistogram(spark: SparkSession, dir: String): DataFrame = {
-    val e = spark.read.parquet(purchaseGraphPath(spark, dir))
+    val e = spark.read.parquet(PurchaseGraph.path(spark, dir))
     def side(keyCol: String, name: String) =
       e.groupBy(col(keyCol)).agg(count(lit(1)).as("d"))
         .select(lit(name).as("side"), length(bin(col("d"))).as("bucket"))

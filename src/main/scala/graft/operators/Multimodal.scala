@@ -347,6 +347,16 @@ object Multimodal {
       .select(col("ahash"), size(col("ids")).as("group_size"),
         slice(array_sort(col("ids")), 1, sampleIds).as("sample_ids"))
 
+  /** The staged blobs: one text file per document with doc_id < 20,
+    * written by the text sink partitioned by doc_id. An ingest
+    * fixture rather than an index, but it has the same lifecycle. */
+  private[graft] val BinaryStage = graft.Indexes.Artifact("binfiles") {
+    (spark, dir, out) =>
+      Tables.documents(spark, dir).filter(col("doc_id") < 20)
+        .select(col("doc_id"), col("text"))
+        .write.mode("overwrite").partitionBy("doc_id").text(out)
+  }
+
   /** `binaryFile` SOURCE ingest (§2.4): land per-document files on disk
     * (the object-store staging layout a media pipeline reads — one blob
     * per asset), ingest them with Spark's built-in `binaryFile` source,
@@ -360,34 +370,16 @@ object Multimodal {
     * doc_id (exactly one file per doc), so content is the utf-8 text
     * plus the sink's trailing newline — the oracle hashes the same
     * bytes. */
-  /** Per-JVM staging-dir cache: like every other on-disk cache here
-    * (tokenIndexPath, pqCodesPath, ...) the path is a fresh
-    * Files.createTempDirectory per (JVM, corpus dir) — a fixed
-    * md5(dir)-keyed /tmp path would be shared across JVMs (two
-    * concurrent runs race overwrite-vs-listing) and predictable to
-    * other local users. Cross-JVM sharing isn't needed: the staging
-    * copy is an ingest fixture, not a corpus index. */
-  private val binStageCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def binaryIngest(spark: SparkSession, dir: String, nDocs: Int = 20): DataFrame = {
-    val out = graft.Indexes.corpusCachedDir(binStageCache, dir) {
-      java.nio.file.Files.createTempDirectory("graft-binfiles")
-        .toFile.getAbsolutePath
-    }
-    Tables.documents(spark, dir).filter(col("doc_id") < nDocs)
-      .select(col("doc_id"), col("text"))
-      .write.mode("overwrite").partitionBy("doc_id").text(out)
+  def binaryIngest(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.txt")
       .option("recursiveFileLookup", "true")
-      .load(out)
+      .load(BinaryStage.path(spark, dir))
       .select(
         regexp_extract(col("path"), "doc_id=([0-9]+)", 1)
           .cast("long").as("doc_id"),
         length(col("content")).as("n_bytes"),
         md5(col("content")).as("content_md5"))
-  }
 
   /** VOICE-ACTIVITY-DETECTION segmentation over the audio payloads —
     * the speech-pipeline pre-pass that turns raw audio into utterance

@@ -559,10 +559,32 @@ object OlapQueries {
       .groupBy("qtr")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("total_cents"))
 
-  /** Corpus dir → materialized quarterly-revenue parquet, built at most
-    * once per JVM ([[graft.Indexes]] discipline). */
-  private val mvQuarterlyCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** MvCatalog entry names of `dir`'s current corpus version. */
+  private def quarterlyName(dir: String) =
+    s"quarterly_revenue:${graft.Indexes.cacheKey(dir)}"
+  private def rollupName(dir: String) =
+    s"quarterly_revenue_rollup:${graft.Indexes.cacheKey(dir)}"
+  private def nationName(dir: String) =
+    s"nation_revenue:${graft.Indexes.cacheKey(dir)}"
+
+  /** The materialized quarterly-revenue view.
+    *
+    * RETIREMENT ORDER: superseded fingerprints' MvCatalog entries are
+    * deregistered BEFORE the view is written. Canonicalized matching is
+    * path-based, so with the rule live the old entry matches the new
+    * corpus's defining plan, and the materialization write itself
+    * would be rewritten to scan the OLD view parquet — silently copying
+    * the old corpus's aggregates into the "new" view. A corpus change
+    * is exactly what rebuilds the artifact, so its build is where the
+    * superseded entries retire, whichever caller builds it first. */
+  private[graft] val MvQuarterly = graft.Indexes.Artifact("mv-quarterly") {
+    (spark, dir, out) =>
+      graft.plans.MvCatalog
+        .deregisterOthers(s"quarterly_revenue:$dir#", quarterlyName(dir))
+      graft.plans.MvCatalog
+        .deregisterOthers(s"quarterly_revenue_rollup:$dir#", rollupName(dir))
+      quarterlyRevenueDef(spark, dir).write.mode("overwrite").parquet(out)
+  }
 
   /** MATERIALIZED-VIEW REWRITE, end to end: build the view parquet
     * once, register its defining plan in [[graft.plans.MvCatalog]],
@@ -576,29 +598,9 @@ object OlapQueries {
     * MAINTAIN, this shows queries USE it with no client-side rewrite.
     */
   def mvRewrite(spark: SparkSession, dir: String): DataFrame = {
-    // RETIREMENT ORDER, part 1 (r15 second-pass review — the bug
-    // predates the round): superseded fingerprints' entries must be
-    // deregistered BEFORE the view REBUILD below, not just before the
-    // canon derivation. Canonicalized matching is path-based, so with
-    // the rule live the old entry matches the new corpus's defining
-    // plan, and the materialization write itself would be rewritten to
-    // scan the OLD view parquet — silently copying the old corpus's
-    // aggregates into the "new" view. The names use the NEW
-    // fingerprint, computed before anything is built.
-    val mvName = s"quarterly_revenue:${graft.Indexes.cacheKey(dir)}"
-    val rollName = s"quarterly_revenue_rollup:${graft.Indexes.cacheKey(dir)}"
-    graft.plans.MvCatalog.deregisterOthers(s"quarterly_revenue:$dir#", mvName)
-    graft.plans.MvCatalog
-      .deregisterOthers(s"quarterly_revenue_rollup:$dir#", rollName)
-    // corpusCachedDir: a superseded corpus version's view parquet is
-    // tree-deleted on eviction (same leak class as the snapshot roots,
-    // r14 advice); its MvCatalog entries were retired right above.
-    val path = graft.Indexes.corpusCachedDir(mvQuarterlyCache, dir) {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-mv-quarterly").toFile.getAbsolutePath
-      quarterlyRevenueDef(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    }
+    val path = MvQuarterly.path(spark, dir)
+    val mvName = quarterlyName(dir)
+    val rollName = rollupName(dir)
     // Registration is atomic skip-if-present (ADVICE r11 + r12): on a
     // SECOND call the rule is already live, so re-deriving the
     // defining plan here yields the REWRITTEN view-scan form, and
@@ -610,11 +612,11 @@ object OlapQueries {
     // canons captured on the first call stay valid for the life of the
     // JVM (the defining shape is a pure function of the corpus dir).
     //
-    // RETIREMENT ORDER, part 2 (r15): the same reasoning covers the
-    // canon derivation below — with a stale entry live, the derivation
-    // would capture a view-scan-shaped canon (or, now that eviction
+    // RETIREMENT ORDER, part 2: the same reasoning covers the canon
+    // derivation below — with a stale entry live, the derivation would
+    // capture a view-scan-shaped canon (or, now that eviction
     // tree-deletes, throw PATH_NOT_FOUND on the old parquet). Both
-    // windows are closed by the deregisterOthers calls ABOVE the build.
+    // windows are closed by the retirement inside MvQuarterly's build.
     graft.plans.MvCatalog.registerIfAbsent(mvName) {
       val defDf = quarterlyRevenueDef(spark, dir)
       // Canonical forms captured BEFORE registration: computing
@@ -721,10 +723,14 @@ object OlapQueries {
       .groupBy("c_nationkey")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("total_cents"))
 
-  /** Corpus dir → materialized nation-revenue parquet, built at most
-    * once per JVM ([[graft.Indexes]] discipline). */
-  private val mvNationCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The materialized nation-revenue view; superseded entries retire
+    * before the write, as in [[MvQuarterly]]. */
+  private[graft] val MvNation = graft.Indexes.Artifact("mv-nation") {
+    (spark, dir, out) =>
+      graft.plans.MvCatalog
+        .deregisterOthers(s"nation_revenue:$dir#", nationName(dir))
+      nationRevenueDef(spark, dir).write.mode("overwrite").parquet(out)
+  }
 
   /** JOIN-OVER-VIEW REWRITE — containment step 4 (r14 verdict №6), the
     * next most common BI restatement after roll-up: the defining
@@ -740,16 +746,8 @@ object OlapQueries {
     * output) matches nothing and keeps its fact plan — MvRewriteSpec
     * pins both directions plus row parity. */
   def mvRewriteJoin(spark: SparkSession, dir: String): DataFrame = {
-    // Retire superseded fingerprints BEFORE the view rebuild AND the
-    // canon derivation — see the retirement-order notes in [[mvRewrite]].
-    val mvName = s"nation_revenue:${graft.Indexes.cacheKey(dir)}"
-    graft.plans.MvCatalog.deregisterOthers(s"nation_revenue:$dir#", mvName)
-    val path = graft.Indexes.corpusCachedDir(mvNationCache, dir) {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft-mv-nation").toFile.getAbsolutePath
-      nationRevenueDef(spark, dir).write.mode("overwrite").parquet(p)
-      p
-    }
+    val path = MvNation.path(spark, dir)
+    val mvName = nationName(dir)
     graft.plans.MvCatalog.registerIfAbsent(mvName) {
       val defDf = nationRevenueDef(spark, dir)
       val canons = Seq(defDf.queryExecution.analyzed,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.ShinglesAll
 
 /** Retrieval-fusion and corpus-scoring operators — the layer between
   * the index structures (BM25 / IVF, TextAnalysis + Similarity) and a
@@ -101,6 +102,20 @@ object Ranking {
       .filter(col("fused_rank") <= k)
   }
 
+  /** Build-once bigram count indexes for `dir`: `bigram` (xy → cxy) and
+    * `first` (x → cx1, count of x in bigram-first position) as parquet
+    * — the corpus LM artifact [[bigramSurprisal]] serves from. */
+  private[graft] val BigramIndex = graft.Indexes.Artifact("bigram-ix") {
+    (spark, dir, out) =>
+      val bi = Tables.documents(spark, dir)
+        .select(explode(ShinglesAll(col("text"), 2)).as("xy"))
+      bi.groupBy("xy").agg(count(lit(1)).as("cxy"))
+        .write.mode("overwrite").parquet(s"$out/bigram")
+      bi.select(split(col("xy"), " ").getItem(0).as("x"))
+        .groupBy("x").agg(count(lit(1)).as("cx1"))
+        .write.mode("overwrite").parquet(s"$out/first")
+  }
+
   /** Per-document mean inverse BIGRAM conditional probability in exact
     * micro-units — the bigram analog of [[TextAnalysis.docRarity]]'s
     * unigram score and the engine-exact stand-in for LM perplexity as a
@@ -113,7 +128,7 @@ object Ranking {
     *
     * Scale: one shingle explode and two token-keyed joins back against
     * the build-once PERSISTED bigram/first-position count indexes
-    * ([[bigramIndexPaths]]) — the docRarity shape. The counts must be
+    * ([[BigramIndex]]) — the docRarity shape. The counts must be
     * scans, not inline aggregates, for the Zipf-skewed join keys to be
     * AQE-skew-splittable at all (an inline count is already
     * hash-partitioned on its own join key, so OptimizeSkewedJoin never
@@ -122,43 +137,13 @@ object Ranking {
     * Docs with <2 tokens have no bigrams and drop out (inner join), in
     * both engines.
     */
-  private val bigramIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  /** Build-once bigram count indexes for `dir`: (xy → cxy) and
-    * (x → cx1, count of x in bigram-first position) as parquet — the
-    * corpus LM artifact [[bigramSurprisal]] serves from. Same
-    * fresh-tempdir lifecycle as TextAnalysis.vocabIndexPath. */
-  private[graft] def bigramIndexPaths(
-      spark: SparkSession, dir: String): (String, String) =
-    graft.Indexes.corpusCached(bigramIndexCache, dir)(onEvict = {
-      case (b, f) =>
-        graft.sources.SnapshotCatalog.deleteTree(java.nio.file.Paths.get(b))
-        graft.sources.SnapshotCatalog.deleteTree(java.nio.file.Paths.get(f))
-    }, build = {
-      graft.functions.ShinglesAll.register(spark)
-      val bi = Tables.documents(spark, dir)
-        .select(explode(expr("shingles_all(text, 2)")).as("xy"))
-      val bOut = java.nio.file.Files
-        .createTempDirectory("graft-bigram-ix").toFile.getAbsolutePath
-      bi.groupBy("xy").agg(count(lit(1)).as("cxy"))
-        .write.mode("overwrite").parquet(bOut)
-      val fOut = java.nio.file.Files
-        .createTempDirectory("graft-bifirst-ix").toFile.getAbsolutePath
-      bi.select(split(col("xy"), " ").getItem(0).as("x"))
-        .groupBy("x").agg(count(lit(1)).as("cx1"))
-        .write.mode("overwrite").parquet(fOut)
-      (bOut, fOut)
-    })
-
   def bigramSurprisal(spark: SparkSession, dir: String): DataFrame = {
-    val (bPath, fPath) = bigramIndexPaths(spark, dir)
-    graft.functions.ShinglesAll.register(spark)
+    val ix = BigramIndex.path(spark, dir)
     val bi = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
-        explode(expr("shingles_all(text, 2)")).as("xy"))
-    val bcnt = spark.read.parquet(bPath)
-    val fcnt = spark.read.parquet(fPath)
+        explode(ShinglesAll(col("text"), 2)).as("xy"))
+    val bcnt = spark.read.parquet(s"$ix/bigram")
+    val fcnt = spark.read.parquet(s"$ix/first")
     bi.withColumn("x", split(col("xy"), " ").getItem(0))
       .join(bcnt, "xy").join(fcnt, "x")
       .select(col("doc_id"), col("lang"),
@@ -184,17 +169,14 @@ object Ranking {
     *
     * Products run in DECIMAL(38,0)/HUGEINT: ct·Nr ≈ 10²⁴ at 100 TB
     * corpus counts, far past int64. Shape: a build-once PERSISTED
-    * ratio table ([[dsirRatioPath]] — exactly what the paper
+    * ratio table ([[DsirRatio]] — exactly what the paper
     * precomputes and reuses across selection runs) + one token-keyed
     * join back against the scan — the docRarity scale pattern, with
     * the same reason the counts must be a scan and not an inline
     * aggregate (AQE skew-splittability; see TextAnalysis.docRarityFrom).
     */
-  private val dsirRatioCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private[graft] def dsirRatioPath(spark: SparkSession, dir: String): String =
-    graft.Indexes.corpusCachedDir(dsirRatioCache, dir) {
+  private[graft] val DsirRatio = graft.Indexes.Artifact("dsir-ratio") {
+    (spark, dir, out) =>
       val words = Tables.documents(spark, dir)
         .select(col("lang"),
           explode(split(lower(col("text")), "\\s+")).as("w"))
@@ -203,8 +185,6 @@ object Ranking {
         .groupBy("w").agg(count(lit(1)).as("ct"))
       val nr = raw.agg(sum("cr").as("nr"))
       val nt = tgt.agg(sum("ct").as("nt"))
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-dsir-ratio").toFile.getAbsolutePath
       raw.join(tgt, Seq("w"), "left_outer")
         .na.fill(0L, Seq("ct"))
         .crossJoin(broadcast(nr)).crossJoin(broadcast(nt))
@@ -212,11 +192,10 @@ object Ranking {
           expr("CAST(1000000 AS DECIMAL(38,0)) * ct * nr" +
             " div (CAST(cr AS DECIMAL(38,0)) * nt)").as("rw"))
         .write.mode("overwrite").parquet(out)
-      out
-    }
+  }
 
   def dsirWeights(spark: SparkSession, dir: String): DataFrame = {
-    val ratio = spark.read.parquet(dsirRatioPath(spark, dir))
+    val ratio = spark.read.parquet(DsirRatio.path(spark, dir))
     val words = Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         explode(split(lower(col("text")), "\\s+")).as("w"))
@@ -250,7 +229,7 @@ object Ranking {
     * ~10²⁴ at 100 TB corpus counts.
     *
     * Plan/scale shape: everything derives from the build-once PERSISTED
-    * bigram index ([[bigramIndexPaths]] — the same artifact
+    * bigram index ([[BigramIndex]] — the same artifact
     * bigramSurprisal serves from, built at most once per JVM): the
     * left-context totals c₁(x)/N1+(x·) and continuation counts N1+(·y)
     * are each ONE map-side-combined aggregate over the post-aggregate
@@ -261,8 +240,7 @@ object Ranking {
     * output is k rows at any SF.
     */
   def kneserNey(spark: SparkSession, dir: String, k: Int = 20): DataFrame = {
-    val (bPath, _) = bigramIndexPaths(spark, dir)
-    val bcnt = spark.read.parquet(bPath)
+    val bcnt = spark.read.parquet(s"${BigramIndex.path(spark, dir)}/bigram")
       .withColumn("x", split(col("xy"), " ").getItem(0))
       .withColumn("y", split(col("xy"), " ").getItem(1))
     val left = bcnt.groupBy("x")
@@ -416,7 +394,7 @@ object Ranking {
     * over the word ADJACENCY graph — nodes are content tokens
     * (alphabetic, non-stopword — the RAKE gate), edges are symmetrized
     * bigram co-occurrence counts served from the build-once persisted
-    * bigram index ([[bigramIndexPaths]], the same artifact the
+    * bigram index ([[BigramIndex]], the same artifact the
     * surprisal and Kneser-Ney queries ride). Each of the
     * [[TextRankRounds]] damped rounds moves integer mass with the
     * overflow-free split identity (mass div ow)·w + ((mass mod ow)·w)
@@ -433,8 +411,7 @@ object Ranking {
   def textRank(spark: SparkSession, dir: String,
       rounds: Int = TextRankRounds): DataFrame = {
     val stop = Seq("the", "a", "of", "and", "to", "in", "is")
-    val (bPath, _) = bigramIndexPaths(spark, dir)
-    val dirEdges = spark.read.parquet(bPath)
+    val dirEdges = spark.read.parquet(s"${BigramIndex.path(spark, dir)}/bigram")
       .select(split(col("xy"), " ").getItem(0).as("src"),
         split(col("xy"), " ").getItem(1).as("dst"), col("cxy").as("w"))
       .filter(col("src") =!= col("dst") &&

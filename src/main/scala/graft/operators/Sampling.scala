@@ -302,7 +302,7 @@ object Sampling {
     // here on every run). Semi-filter by the pool BEFORE anything
     // shuffles; the result stays pool-bounded.
     val purchasedInPool = spark.read
-      .parquet(graft.operators.GraphOps.purchaseGraphPath(spark, dir))
+      .parquet(GraphOps.PurchaseGraph.path(spark, dir))
       .select(col("c").as("cust"), col("p").as("p_partkey"))
       .join(broadcast(pool.select("p_partkey")), Seq("p_partkey"), "left_semi")
       // Pool-bounded (|purchases ∩ pool| rows); consumed by the anti

@@ -271,7 +271,7 @@ object Similarity {
     * can never drift. Centroids live in the model's int8-quantized
     * space (exact integer L2², bit-deterministic across engines). */
   def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${ivfIndexPath(spark, dir)}/centroids")
+    spark.read.parquet(s"${IvfIndex.path(spark, dir)}/centroids")
 
   /** The trained quantizer pair: (final centroids as (cell, centroid)
     * long arrays, final-centroid assignments carrying BOTH the float
@@ -314,7 +314,7 @@ object Similarity {
     // read plus the probed cells. PlanRegressionSpec pins the scan
     // counts. The DuckDB oracle still replays the build+serve pipeline
     // from the raw corpus — identical results, hash-checked.
-    val ix = ivfIndexPath(spark, dir)
+    val ix = IvfIndex.path(spark, dir)
     annIvfFrom(spark.read.parquet(s"$ix/assignments"),
       spark.read.parquet(s"$ix/centroids"), probes)
   }
@@ -641,24 +641,15 @@ object Similarity {
     * at scale. Subspace distances enter the sum as integer micro-units
     * so the M-way sum is order-independent (hash-agg merge order is
     * not deterministic for doubles) and hash-matches the DuckDB replay.
+    *
+    * The persisted code table is the artifact: the codes ARE the
+    * compressed corpus a PQ deployment ships — 2 bytes per vector here
+    * vs 256 raw — so encoding belongs to index build, not query time.
     */
-  /** Corpus dir → persisted PQ codes path, built at most once per JVM:
-    * the codes ARE the compressed corpus a PQ deployment ships — 2
-    * bytes per vector here vs 256 raw — so encoding belongs to index
-    * build, not query time (same cache discipline as the IVF/token
-    * indexes). */
-  private val pqCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Force the build-once PQ code table for `dir` and return its path
-    * (explicit index-build entry point; see [[Indexes.prebuild]]). */
-  private[graft] def pqCodesPath(spark: SparkSession, dir: String): String =
-    graft.Indexes.corpusCachedDir(pqCodesCache, dir) {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-pq-codes").toFile.getAbsolutePath
+  private[graft] val PqCodes = graft.Indexes.Artifact("pq-codes") {
+    (spark, dir, out) =>
       pqCodesFrom(pqDistances(spark, dir)).write.mode("overwrite").parquet(out)
-      out
-    }
+  }
 
   /** IVF-PQ / IVFADC ANN — the FAISS serving shape (Jégou et al.,
     * TPAMI'11) that actually runs at trillion-vector scale, composed
@@ -680,7 +671,7 @@ object Similarity {
     // (query vectors and codebook anchors are pushdown-filtered rows
     // OF the assignments artifact, standing in for vectors arriving
     // from outside). PlanRegressionSpec pins embeddings-scans = 0.
-    val ix = ivfIndexPath(spark, dir)
+    val ix = IvfIndex.path(spark, dir)
     val asg = spark.read.parquet(s"$ix/assignments")
     val queries = asg.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("q").as("qq"))
@@ -701,7 +692,7 @@ object Similarity {
       .select(col("vec_id").as("lut_query"), col("m"), col("anchor_id"),
         floor(col("ssd") * lit(1000000.0) + lit(0.5)).cast("long")
           .as("micro"))
-    val codes = spark.read.parquet(pqCodesPath(spark, dir))
+    val codes = spark.read.parquet(PqCodes.path(spark, dir))
       .join(asg.select(col("vec_id"), col("cell")), "vec_id")
     val w = Window.partitionBy("query_id")
       .orderBy(col("approx_l2_micro"), col("vec_id"))
@@ -779,7 +770,7 @@ object Similarity {
     val e = Tables.embeddings(spark, dir)
     // Serve the corpus codes from the persisted index; compute only the
     // KB-sized query LUT (5 query vectors × 16 anchors) at query time.
-    val codesPath = pqCodesPath(spark, dir)
+    val codesPath = PqCodes.path(spark, dir)
     val lut = pqDistancesOf(e.filter(col("vec_id") < 5), pqAnchors(e))
       .select(col("vec_id").as("query_id"), col("m"), col("anchor_id"),
         floor(col("ssd") * lit(1000000.0) + lit(0.5)).cast("long").as("micro"))
@@ -1100,7 +1091,7 @@ object Similarity {
     // shape re-ran the whole quantize + KmeansRounds training here on
     // every run). The DuckDB oracle still replays the full train+score
     // pipeline from the raw corpus — identical results, hash-checked.
-    val ix = ivfIndexPath(spark, dir)
+    val ix = IvfIndex.path(spark, dir)
     val qv = spark.read.parquet(s"$ix/assignments").select("vec_id", "q")
     val cents = spark.read.parquet(s"$ix/centroids")
       .select(col("cell").as("cluster"), col("centroid").as("c"))
@@ -1158,30 +1149,19 @@ object Similarity {
       .select(col("query_id"), col("nn_rank"), col("vec_id"), col("cos_sim"),
         col("source"), substring(col("text"), 1, 80).as("snippet"))
 
+  /** The persisted IVF index: `centroids` and `assignments`. */
+  private[graft] val IvfIndex = graft.Indexes.Artifact("ivf-ix") {
+    (spark, dir, out) => buildIvfIndex(spark, dir, out)
+  }
+
   /** Retrieval SERVED from the persisted IVF index: [[buildIvfIndex]]
     * writes centroids + assignments once, then the query plan reads
     * ONLY the index parquet (embeddings are never re-scanned or
     * re-quantized) plus the doc store post-top-k — the index-build /
     * index-serve split of a production vector-search deployment.
     * Result is identical to [[retrieval]] (same oracle). */
-  /** Corpus dir → persisted IVF index path, built at most once per JVM
-    * (same build-once/serve-many cache discipline as the token index —
-    * see TextAnalysis.tokenIndexCache). */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Force the build-once IVF index for `dir` and return its path
-    * (explicit index-build entry point; see [[Indexes.prebuild]]). */
-  private[graft] def ivfIndexPath(spark: SparkSession, dir: String): String =
-    graft.Indexes.corpusCachedDir(ivfIndexCache, dir) {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivf-ix").toFile.getAbsolutePath
-      buildIvfIndex(spark, dir, path)
-      path
-    }
-
   def retrievalServed(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val out = ivfIndexPath(spark, dir)
+    val out = IvfIndex.path(spark, dir)
     retrievalFrom(
       annIvfFrom(spark.read.parquet(s"$out/assignments"),
         spark.read.parquet(s"$out/centroids")),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.functions.AvroOrder
+import graft.functions.{AvroOrder, FromAvroOrder, FromAvroOrderV2, ToAvroOrder}
 import graft.streaming.OrderStream
 
 /** Batch-checkable faces of the streaming + Avro surface (SURVEY.md §2.1
@@ -12,6 +12,16 @@ import graft.streaming.OrderStream
   * to the events table so the DuckDB oracle can validate them.
   */
 object StreamQueries {
+
+  /** events → one Avro-encoded Order payload (`avro_bytes`) each. */
+  private def avroOrders(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(ToAvroOrder(expr(
+        """named_struct(
+          |  'orderId', concat('ORD-', lpad(cast(event_id as string), 7, '0')),
+          |  'product', event_type,
+          |  'price', cast(value as float),
+          |  'timestamp', ts div 1000000)""".stripMargin)).as("avro_bytes"))
 
   /** Avro round-trip: events → Order structs → Avro binary (custom
     * ToAvroOrder expression) → decode (FromAvroOrder) → aggregate the
@@ -21,15 +31,8 @@ object StreamQueries {
     * zigzag varint for Jan-2024 epoch millis).
     */
   def avroRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    AvroOrder.register(spark)
-    Tables.events(spark, dir)
-      .select(expr(
-        """to_avro_order(named_struct(
-          |  'orderId', concat('ORD-', lpad(cast(event_id as string), 7, '0')),
-          |  'product', event_type,
-          |  'price', cast(value as float),
-          |  'timestamp', ts div 1000000)) AS avro_bytes""".stripMargin))
-      .select(expr("from_avro_order(avro_bytes)").as("o"),
+    avroOrders(spark, dir)
+      .select(FromAvroOrder(col("avro_bytes")).as("o"),
         length(col("avro_bytes")).as("payload_bytes"))
       .groupBy(col("o.product").as("product"))
       .agg(
@@ -188,15 +191,8 @@ object StreamQueries {
     * proving resolution changed nothing else.
     */
   def avroEvolution(spark: SparkSession, dir: String): DataFrame = {
-    AvroOrder.register(spark)
-    Tables.events(spark, dir)
-      .select(expr(
-        """to_avro_order(named_struct(
-          |  'orderId', concat('ORD-', lpad(cast(event_id as string), 7, '0')),
-          |  'product', event_type,
-          |  'price', cast(value as float),
-          |  'timestamp', ts div 1000000)) AS avro_bytes""".stripMargin))
-      .select(expr("from_avro_order_v2(avro_bytes)").as("o"))
+    avroOrders(spark, dir)
+      .select(FromAvroOrderV2(col("avro_bytes")).as("o"))
       .groupBy(col("o.product").as("product"), col("o.currency").as("currency"))
       .agg(count(lit(1)).as("order_count"),
         sum(round(col("o.price") * 100, 0).cast("long")).as("sum_price_cents"))

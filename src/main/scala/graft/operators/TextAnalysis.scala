@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.{Shingles, ShinglesAll}
 
 /** Text-analysis operators for LLM-training-data pipelines (SURVEY.md
   * §2.3 rows 38-41): language ID, quality scoring, token counting,
@@ -187,11 +188,10 @@ object TextAnalysis {
   }
 
   def repetitionRatio(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Shingles.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         greatest(size(tokens) - 2, lit(0)).as("n_trigrams"),
-        size(expr("shingles(text, 3)")).as("n_distinct"))
+        size(Shingles(col("text"), 3)).as("n_distinct"))
       .withColumn("rep_ratio",
         when(col("n_trigrams") > 0,
           lit(1.0) - col("n_distinct").cast("double") / col("n_trigrams")))
@@ -642,14 +642,11 @@ object TextAnalysis {
     spark.read.parquet(out)
   }
 
-  /** Corpus dir → on-disk token index path, built at most once per JVM:
-    * the index-build / index-serve split — every phrase query after the
-    * first serves from the same parquet (the testdata corpora are
-    * immutable; a changing corpus calls [[persistedTokenIndex]] with
-    * its own lifecycle). ConcurrentHashMap so concurrent first queries
-    * (Verify runs 6-way) build exactly once. */
-  private val tokenIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The build-once token index: the index-build / index-serve split —
+    * every phrase query serves from the same parquet. */
+  private[graft] val TokenIndex = graft.Indexes.Artifact("token-ix") {
+    (spark, dir, out) => persistedTokenIndex(spark, dir, out)
+  }
 
   /** Exact phrase search over the persisted positional inverted index —
     * the IR primitive behind "find verbatim quotes of X in the corpus"
@@ -657,7 +654,7 @@ object TextAnalysis {
     * [[phraseSearchIndexed]] for the single-scan plan shape. */
   def phraseSearch(spark: SparkSession, dir: String,
       phrase: Seq[String] = DefaultPhrase): DataFrame =
-    phraseSearchIndexed(spark.read.parquet(tokenIndexPath(spark, dir)), phrase)
+    phraseSearchIndexed(spark.read.parquet(TokenIndex.path(spark, dir)), phrase)
 
   private[graft] val DefaultPrefixes = Seq("s", "c", "f")
 
@@ -674,7 +671,7 @@ object TextAnalysis {
   def prefixSearch(spark: SparkSession, dir: String,
       prefixes: Seq[String] = DefaultPrefixes, k: Int = 5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ix = spark.read.parquet(tokenIndexPath(spark, dir))
+    val ix = spark.read.parquet(TokenIndex.path(spark, dir))
     prefixes.map { p =>
       ix.filter(col("tok").startsWith(p))
         .groupBy("tok").agg(count(lit(1)).as("cnt"))
@@ -685,36 +682,18 @@ object TextAnalysis {
       .filter(col("rn") <= k)
   }
 
-  /** Force the build-once token index for `dir` and return its path —
-    * the explicit index-build entry point ([[Indexes.prebuild]] calls it
-    * so benchmarked serve paths never pay the build). */
-  private[graft] def tokenIndexPath(spark: SparkSession, dir: String): String =
-    graft.Indexes.corpusCachedDir(tokenIndexCache, dir) {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-token-ix").toFile.getAbsolutePath
-      persistedTokenIndex(spark, dir, out)
-      out
-    }
-
-  private val vocabIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once corpus VOCAB index: (w, cnt) token occurrence counts as
     * parquet — the shared artifact the rarity/surprisal family joins
     * back against. Persisting it (vs an inline groupBy) is what makes
     * the Zipf-skewed token join-back AQE-skew-splittable at all: see
-    * [[docRarityFrom]]. Same fresh-tempdir-per-(JVM, dir) lifecycle as
-    * [[tokenIndexPath]]. */
-  private[graft] def vocabIndexPath(spark: SparkSession, dir: String): String =
-    graft.Indexes.corpusCachedDir(vocabIndexCache, dir) {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-vocab-ix").toFile.getAbsolutePath
+    * [[docRarityFrom]]. */
+  private[graft] val VocabIndex = graft.Indexes.Artifact("vocab-ix") {
+    (spark, dir, out) =>
       Tables.documents(spark, dir)
         .select(explode(tokens).as("w"))
         .groupBy("w").agg(count(lit(1)).as("cnt"))
         .write.mode("overwrite").parquet(out)
-      out
-    }
+  }
 
   /** Phrase match as ONE scan of the positional index: filter postings
     * to the phrase's terms (pushed to the parquet scan), explode each
@@ -771,7 +750,7 @@ object TextAnalysis {
     * source of truth for operator and generated oracle. */
   private[graft] val BpeRounds = 5
 
-  /** ITERATIVE BPE training (Sennrich, Haddow & Birch 2016): `rounds`
+  /** ITERATIVE BPE training (Sennrich, Haddow & Birch 2016): [[BpeRounds]]
     * greedy merge rounds over the corpus word-frequency table,
     * returning the learned merge list — the actual tokenizer-training
     * loop, of which [[bpePairCounts]] is one round's statistic.
@@ -794,57 +773,30 @@ object TextAnalysis {
     * per-round `localCheckpoint` keeps the k-round plan linear instead
     * of exponential (each round references the previous round twice:
     * once for pairs, once for the rewrite), the same fixpoint
-    * materialization discipline as the connected-components loop. */
-  /** Corpus dir|rounds → parquet path of the trained merge table,
-    * built at most once per JVM — the tokenizer is TRAINED once and
-    * applied everywhere (same build/serve cache discipline as the
-    * token/IVF indexes; the persisted merge list IS what a tokenizer
+    * materialization discipline as the connected-components loop.
+    *
+    * The merge table (merge_round, lhs, rhs, merged, pair_count) is a
+    * corpus artifact: the tokenizer is TRAINED once per corpus and
+    * applied everywhere (the persisted merge list IS what a tokenizer
     * release ships). */
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def trainedMerges(spark: SparkSession, dir: String,
-      rounds: Int): DataFrame = {
-    val key = s"${graft.Indexes.cacheKey(dir)}|$rounds"
-    val path = bpeMergeCache.computeIfAbsent(key, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-bpe-merges").toFile.getAbsolutePath
-      bpeTrain(spark, dir, rounds).zipWithIndex.map { case (best, i) =>
+  private[graft] val BpeMerges = graft.Indexes.Artifact("bpe-merges") {
+    (spark, dir, out) =>
+      bpeTrain(spark, dir).zipWithIndex.map { case (best, i) =>
         best.select(lit(i + 1).as("merge_round"), col("l").as("lhs"),
           col("r").as("rhs"), concat(col("l"), col("r")).as("merged"),
           col("cnt").as("pair_count"))
       }.reduce(_ unionAll _)
         .coalesce(1).write.mode("overwrite").parquet(out)
-      out
-    })
-    // Superseded-fingerprint eviction with tree deletion (r15 — this
-    // cache's `|rounds`-suffixed key scheme kept it outside
-    // corpusCachedDir): a corpus changing under the same path retires
-    // the old fingerprint's trained merges for the same round count,
-    // entry AND parquet.
-    val it = bpeMergeCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(dir + "#") &&
-          e.getKey.endsWith(s"|$rounds") && e.getKey != key) {
-        graft.sources.SnapshotCatalog.deleteTree(
-          java.nio.file.Paths.get(e.getValue))
-        it.remove()
-      }
-    }
-    spark.read.parquet(path)
   }
 
-  def bpeMerges(spark: SparkSession, dir: String,
-      rounds: Int = BpeRounds): DataFrame =
-    trainedMerges(spark, dir, rounds)
+  def bpeMerges(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(BpeMerges.path(spark, dir))
 
   /** The training loop proper: returns the per-round best-pair tables
     * (each a checkpointed single row (l, r, cnt)), in merge order —
-    * consumed by [[bpeMerges]] (the merge list) and [[bpeEncode]] (the
-    * corpus-wide apply). */
-  private[graft] def bpeTrain(spark: SparkSession, dir: String,
-      rounds: Int): Seq[DataFrame] = {
+    * the build of [[BpeMerges]]. */
+  private[graft] def bpeTrain(spark: SparkSession,
+      dir: String): Seq[DataFrame] = {
     var words = Tables.documents(spark, dir)
       .select(explode(tokens).as("word"))
       .filter(length(col("word")) >= 1)
@@ -852,7 +804,7 @@ object TextAnalysis {
       .select(concat(lit("  "), regexp_replace(col("word"), "(.)", "$1  "))
         .as("s"), col("cnt"))
       .localCheckpoint()
-    (1 to rounds).map { _ =>
+    (1 to BpeRounds).map { _ =>
       val pairs = words
         .select(split(trim(col("s")), "  ").as("syms"), col("cnt"))
         .filter(size(col("syms")) >= 2)
@@ -888,9 +840,8 @@ object TextAnalysis {
     * aggregate, so the string work scales with vocabulary while the
     * corpus only pays an explode + groupBy. Identical per-word results
     * by construction (BPE is a pure word function). */
-  def bpeEncode(spark: SparkSession, dir: String,
-      rounds: Int = BpeRounds): DataFrame = {
-    val merges = trainedMerges(spark, dir, rounds)
+  def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
+    val merges = bpeMerges(spark, dir)
       .orderBy("merge_round")
       .select("lhs", "rhs").collect()
       .map(r => (r.getString(0), r.getString(1)))
@@ -993,7 +944,6 @@ object TextAnalysis {
     * runs over that aggregate-bounded input. */
   def pmiCollocations(spark: SparkSession, dir: String, k: Int = 20,
       minCount: Long = 5): DataFrame = {
-    graft.functions.ShinglesAll.register(spark)
     val docs = Tables.documents(spark, dir)
     // Checkpointed (r19): the unigram histogram has THREE consumers
     // (total + both vocab joins) and the bigram histogram TWO (total +
@@ -1004,7 +954,7 @@ object TextAnalysis {
       .groupBy("x").agg(count(lit(1)).as("cx"))
       .localCheckpoint()
     val nTot = uni.agg(sum("cx").as("n"))
-    val bi = docs.select(explode(expr("shingles_all(text, 2)")).as("xy"))
+    val bi = docs.select(explode(ShinglesAll(col("text"), 2)).as("xy"))
       .groupBy("xy").agg(count(lit(1)).as("cxy"))
       .localCheckpoint()
     val mTot = bi.agg(sum("cxy").as("m"))
@@ -1110,7 +1060,7 @@ object TextAnalysis {
     * skew split / salting, never pair explosion. */
   def docRarity(spark: SparkSession, dir: String): DataFrame =
     docRarityFrom(Tables.documents(spark, dir),
-      spark.read.parquet(vocabIndexPath(spark, dir)))
+      spark.read.parquet(VocabIndex.path(spark, dir)))
 
   /** Operator body on arbitrary (doc_id, lang, text) docs and a
     * SCAN-SOURCED (w, cnt) vocab — the seam ScaleToolsSpec uses to
@@ -1118,7 +1068,7 @@ object TextAnalysis {
     * THIS operator's own plan (same pattern as Dedup.erPairsFrom).
     *
     * The vocab MUST arrive as a scan (the build-once
-    * [[vocabIndexPath]] index), not an inline groupBy: Spark's
+    * [[VocabIndex]]), not an inline groupBy: Spark's
     * OptimizeSkewedJoin only matches SMJ(Sort(ShuffleStage),
     * Sort(ShuffleStage)), and an inline count aggregate is already
     * hash-partitioned on the join key, so no exchange — and therefore

@@ -151,7 +151,7 @@ object SnapshotCatalog {
   }
 
   /** Recursive delete (children before parents); shared by [[expire]]
-    * and the superseded-artifact cleanup in Indexes.corpusCachedDir.
+    * and the superseded-artifact cleanup in Indexes.Artifact.
     * Tolerates a CONCURRENT deleter (two threads evicting the same
     * stale cache entry): a file vanishing mid-walk is the other
     * deleter finishing our job, not an error — `deleteIfExists` covers

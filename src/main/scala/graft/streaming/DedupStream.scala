@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Shingles
 import graft.operators.Dedup
 
 /** A streamed document (the daily-crawl record arriving on the wire). */
@@ -27,30 +28,15 @@ final case class StreamDoc(doc_id: Long, text: String)
   */
 object DedupStream {
 
-  /** (band index, doc sets) parquet paths for `dir`'s HISTORY side —
-    * doc_id % 5 != 4, the same ingest split the batch operator uses.
-    * Build-once per (corpus content, JVM); [[graft.Indexes]]
-    * discipline. */
-  private val historyIxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
-  private[graft] def historyIndexPaths(spark: SparkSession,
-      dir: String): (String, String) =
-    graft.Indexes.corpusCached(historyIxCache, dir)(onEvict = {
-      case (b, s) =>
-        graft.sources.SnapshotCatalog.deleteTree(java.nio.file.Paths.get(b))
-        graft.sources.SnapshotCatalog.deleteTree(java.nio.file.Paths.get(s))
-    }, build = {
-      val bands = java.nio.file.Files
-        .createTempDirectory("graft-hist-bands").toFile.getAbsolutePath
-      val sets = java.nio.file.Files
-        .createTempDirectory("graft-hist-sets").toFile.getAbsolutePath
+  /** The HISTORY side's band index (`bands`) and doc sets (`sets`) —
+    * doc_id % 5 != 4, the same ingest split the batch operator uses. */
+  private[graft] val HistoryIndex = graft.Indexes.Artifact("hist-ix") {
+    (spark, dir, out) =>
       val histEx = Dedup.shingleIndex(spark, dir)
         .filter(col("doc_id") % 5 =!= 4)
-      Dedup.bandTableOf(histEx).write.mode("overwrite").parquet(bands)
-      Dedup.docSetsOf(histEx).write.mode("overwrite").parquet(sets)
-      (bands, sets)
-    })
+      Dedup.bandTableOf(histEx).write.mode("overwrite").parquet(s"$out/bands")
+      Dedup.docSetsOf(histEx).write.mode("overwrite").parquet(s"$out/sets")
+  }
 
   /** foreachBatch splitter: route each micro-batch's fresh docs to
     * `newSink` and near-dups of the history index to `dupSink`, each
@@ -62,14 +48,13 @@ object DedupStream {
   def dedupSplit(spark: SparkSession, dir: String,
       newSink: (DataFrame, Long) => Unit,
       dupSink: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit = {
-    val (bandsPath, setsPath) = historyIndexPaths(spark, dir)
+    val ix = HistoryIndex.path(spark, dir)
     (batch: DataFrame, batchId: Long) => {
       val s = batch.sparkSession
-      graft.functions.Shingles.register(s)
       val batchEx = batch
-        .select(col("doc_id"), explode(expr("shingles(text)")).as("shingle"))
+        .select(col("doc_id"), explode(Shingles(col("text"), 3)).as("shingle"))
       val verdicts = Dedup.probeVerdicts(batchEx,
-        s.read.parquet(bandsPath), s.read.parquet(setsPath)).cache()
+        s.read.parquet(s"$ix/bands"), s.read.parquet(s"$ix/sets")).cache()
       try {
         val routed = batch.join(verdicts, "doc_id")
         newSink(routed.filter(col("verdict") === "new")

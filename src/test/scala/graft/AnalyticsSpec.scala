@@ -21,7 +21,6 @@ class AnalyticsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("shingles expression == HOF formulation, corpus + edge cases") {
     import spark.implicits._
-    graft.functions.Shingles.register(spark)
     val edge = Seq(
       "", "one", "one two", "one two three",
       "  leading and trailing  ",

@@ -104,8 +104,6 @@ class CodegenParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Shingles / ShinglesAll parity") {
-    graft.functions.Shingles.register(spark)
-    graft.functions.ShinglesAll.register(spark)
     assertParity("Shingles")(
       Tables.documents(spark, sfDir).filter(col("doc_id") < 50)
         .selectExpr("doc_id", "shingles(text, 3) AS sh",
@@ -121,7 +119,6 @@ class CodegenParitySpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Avro encode/decode round-trip parity") {
-    graft.functions.AvroOrder.register(spark)
     assertParity("AvroOrder")(
       Tables.orders(spark, sfDir).filter(col("o_orderkey") < 200)
         .selectExpr(

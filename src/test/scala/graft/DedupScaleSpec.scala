@@ -219,7 +219,6 @@ class DedupScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("winnowing: shared >=7-word run guarantees a shared fingerprint") {
     import spark.implicits._
-    graft.functions.ShinglesAll.register(spark)
     // K=4, W=4 → detection floor W+K-1 = 7 words. Two documents with
     // disjoint text except one verbatim 7-word run MUST share a
     // fingerprint (SIGMOD'03 Thm: both see the same window of gram
@@ -242,7 +241,6 @@ class DedupScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("winnowing: fingerprint density is ~2/(W+1) of gram count") {
-    graft.functions.ShinglesAll.register(spark)
     val docs = Tables.documents(spark, sfDir)
     val grams = docs.selectExpr("explode(shingles_all(text, 4))").count()
     val fps = Dedup.winnowFingerprints(docs).count()

@@ -4,10 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The index staleness contract (verdict r12 №3): every build-once
-  * corpus index keys its per-JVM cache on `dir#fingerprint`, not the
-  * bare path. Same content under one path → one build, served twice.
-  * Changed content under the SAME path (the daily-crawl shape
+/** The index staleness contract: every build-once corpus artifact
+  * ([[Indexes.Artifact]]) keys its per-JVM cache on `dir#fingerprint`,
+  * not the bare path. Same content under one path → one build, served
+  * twice. Changed content under the SAME path (the daily-crawl shape
   * q_ivf_update / q_incremental_minhash exist for) → a REBUILD, never
   * a silently-served stale index. Two dirs with identical listings
   * don't cross-serve (the key carries the dir).
@@ -51,8 +51,8 @@ class IndexFreshnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("vocab index: serve-on-same, rebuild-on-change, old entry dropped") {
     val d = mkCorpus()
     val dir = d.toString
-    val p1 = operators.TextAnalysis.vocabIndexPath(spark, dir)
-    val p2 = operators.TextAnalysis.vocabIndexPath(spark, dir)
+    val p1 = operators.TextAnalysis.VocabIndex.path(spark, dir)
+    val p2 = operators.TextAnalysis.VocabIndex.path(spark, dir)
     assert(p1 == p2, "unchanged corpus must be served the cached index")
     // Occurrence total, not distinct-word count: the synthetic corpora
     // share one small vocabulary, so only the counts distinguish them.
@@ -61,43 +61,44 @@ class IndexFreshnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n1 = occurrences(p1)
 
     swapContent(d)
-    val p3 = operators.TextAnalysis.vocabIndexPath(spark, dir)
+    val p3 = operators.TextAnalysis.VocabIndex.path(spark, dir)
     assert(p3 != p1,
       "changed corpus under the same path must REBUILD, not serve stale")
     val n3 = occurrences(p3)
     assert(n3 != n1,
       s"rebuilt index must reflect the new corpus (old $n1, new $n3)")
     // Serve-on-same again for the NEW content.
-    assert(operators.TextAnalysis.vocabIndexPath(spark, dir) == p3)
+    assert(operators.TextAnalysis.VocabIndex.path(spark, dir) == p3)
   }
 
-  test("corpusCached drops the superseded entry, keeps the live one") {
-    val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, String]()
+  test("an artifact drops the superseded entry and deletes its tree") {
+    val ix = operators.TextAnalysis.VocabIndex
     val d = mkCorpus()
     val dir = d.toString
-    var builds = 0
-    def get(): String =
-      Indexes.corpusCached(cache, dir) { builds += 1; s"artifact-$builds" }
-    assert(get() == "artifact-1" && get() == "artifact-1" && builds == 1)
+    val (b0, e0) = (ix.builds, ix.entries)
+    val p1 = ix.path(spark, dir)
+    assert(ix.path(spark, dir) == p1 && ix.builds == b0 + 1)
     swapContent(d)
-    assert(get() == "artifact-2" && builds == 2)
-    assert(cache.size == 1,
-      s"superseded fingerprint entry must be dropped: ${cache.keySet}")
-    assert(get() == "artifact-2" && builds == 2)
+    val p2 = ix.path(spark, dir)
+    assert(p2 != p1 && ix.builds == b0 + 2)
+    assert(ix.entries == e0 + 1,
+      "superseded fingerprint entry must be dropped")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(p1)),
+      s"superseded artifact tree must be deleted: $p1")
+    assert(ix.path(spark, dir) == p2 && ix.builds == b0 + 2)
   }
 
   test("two distinct dirs never cross-serve, even with equal listings") {
-    val cache =
-      new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val ix = operators.TextAnalysis.VocabIndex
     val d1 = mkCorpus()
     val d2 = java.nio.file.Files.createTempDirectory("graft-fresh-corpus")
     java.nio.file.Files.copy(
       d1.resolve("documents.parquet"), d2.resolve("documents.parquet"),
       java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
-    val a = Indexes.corpusCached(cache, d1.toString) { "from-d1" }
-    val b = Indexes.corpusCached(cache, d2.toString) { "from-d2" }
-    assert(a == "from-d1" && b == "from-d2" && cache.size == 2)
+    val (b0, e0) = (ix.builds, ix.entries)
+    val a = ix.path(spark, d1.toString)
+    val b = ix.path(spark, d2.toString)
+    assert(a != b && ix.builds == b0 + 2 && ix.entries == e0 + 2)
   }
 
   test("MV catalog: changed corpus retires the superseded view entry") {

@@ -914,7 +914,6 @@ class OrderStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("try_from_avro_order yields NULL on corrupt payloads (DLQ-able)") {
     import spark.implicits._
-    graft.functions.AvroOrder.register(spark)
     val df = Seq(
       ("good", "ORD-0000001"),
       ("truncated", "ORD-0000002"),
@@ -945,7 +944,6 @@ class OrderStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("Avro codec round-trips exact values through SQL functions") {
     import spark.implicits._
-    graft.functions.AvroOrder.register(spark)
     val df = Seq(("ORD-0000042", "Laptop", 1234.56f, 1704067200123L))
       .toDF("orderId", "product", "price", "timestamp")
       .select(expr("from_avro_order(to_avro_order(named_struct(" +

@@ -149,7 +149,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val cells = ivf.select("query_id", "cell").collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     val cellOf = spark.read
-      .parquet(s"${Similarity.ivfIndexPath(spark, sf)}/assignments")
+      .parquet(s"${Similarity.IvfIndex.path(spark, sf)}/assignments")
       .select("vec_id", "cell").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // expected: brute-force rank over vectors in those cells only
@@ -301,8 +301,8 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("iterative BPE merges match a naive reference implementation") {
-    val expected = naiveTrain(corpusWords, 5)
-    val got = TextAnalysis.bpeMerges(spark, sf, 5)
+    val expected = naiveTrain(corpusWords, TextAnalysis.BpeRounds)
+    val got = TextAnalysis.bpeMerges(spark, sf)
       .collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getString(3),
         r.getLong(4)))
@@ -313,7 +313,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("BPE encode applies the learned merges exactly (per-doc counts match naive)") {
     import org.apache.spark.sql.functions._
-    val merges = naiveTrain(corpusWords, 5).map(m => (m._2, m._3))
+    val merges = naiveTrain(corpusWords, TextAnalysis.BpeRounds).map(m => (m._2, m._3))
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), lower(col("text")).as("t"))
       .collect().map(r => (r.getLong(0), r.getString(1)))
@@ -327,7 +327,7 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       }.sum
       id -> ((before, after))
     }.toMap
-    val got = TextAnalysis.bpeEncode(spark, sf, 5)
+    val got = TextAnalysis.bpeEncode(spark, sf)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == expected)
   }

@@ -197,13 +197,33 @@ class PlanRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("no query plan contains a driver-side collect or cartesian product") {
-    for ((name, fn) <- SparkEntry.queries) {
-      val p = fn(spark, sf).queryExecution.executedPlan.toString
-      withClue(s"$name:\n$p") {
-        assert(!p.contains("CartesianProduct"),
-          s"$name uses a cartesian product")
+  test("no cartesian product in any query plan; no artifact built after prebuild") {
+    // A fresh copy, so prebuild really builds every artifact here and a
+    // query that reads one prebuild skipped would build it in the loop.
+    val src = java.nio.file.Paths.get(sf)
+    val dir = java.nio.file.Files.createTempDirectory("graft-prebuild-sf")
+    val files = java.nio.file.Files.list(src)
+    try files.forEach(f => java.nio.file.Files.copy(f, dir.resolve(f.getFileName)))
+    finally files.close()
+    try {
+      Indexes.prebuild(spark, dir.toString)
+      def builds = Indexes.declared.map(a => a.name -> a.builds).toMap
+      val before = builds
+      for ((name, fn) <- SparkEntry.queries) {
+        val p = fn(spark, dir.toString).queryExecution.executedPlan.toString
+        withClue(s"$name:\n$p") {
+          assert(!p.contains("CartesianProduct"),
+            s"$name uses a cartesian product")
+        }
+        val late = builds.filter { case (a, n) => before.get(a) != Some(n) }
+        assert(late.isEmpty,
+          s"$name built ${late.keys.mkString(", ")} after Indexes.prebuild")
       }
+    } finally {
+      plans.MvCatalog.deregisterPrefix(s"quarterly_revenue:$dir")
+      plans.MvCatalog.deregisterPrefix(s"quarterly_revenue_rollup:$dir")
+      plans.MvCatalog.deregisterPrefix(s"nation_revenue:$dir")
+      sources.SnapshotCatalog.deleteTree(dir)
     }
   }
 

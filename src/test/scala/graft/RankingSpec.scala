@@ -84,8 +84,7 @@ class RankingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // for every left context x: observed continuations contribute
     // (4c−3)·N₊₊ + 3·N1₊(x)·cont(y), unobserved ones 3·N1₊(x)·cont(y),
     // denominator 4·c₁(x)·N₊₊ — and Σ_y cont(y) = N₊₊ makes it close.
-    val (bPath, _) = Ranking.bigramIndexPaths(spark, sf)
-    val bi = spark.read.parquet(bPath)
+    val bi = spark.read.parquet(s"${Ranking.BigramIndex.path(spark, sf)}/bigram")
       .select(split(col("xy"), " ").getItem(0).as("x"),
         split(col("xy"), " ").getItem(1).as("y"), col("cxy"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))

@@ -561,7 +561,6 @@ class ScaleToolsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("Avro codec round-trips arbitrary orders (property)") {
     import spark.implicits._
-    graft.functions.AvroOrder.register(spark)
     val gen = for {
       id <- Gen.stringOf(Gen.asciiPrintableChar)
       product <- Gen.oneOf(Gen.alphaNumStr, Gen.stringOf(Gen.choose('\u0000', '\ud7ff')))
