@@ -1,25 +1,27 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
-/** Benchmark main (driver contract): runs the headline queries at
-  * SPARK_GRAFT_SF_DIR and prints one JSON line.
+/** Benchmark main: times every registered query at
+  * SPARK_GRAFT_SF_DIR, one after another, and prints one JSON line per
+  * query plus a final summary line.
   *
   * Each query is forced through the `noop` sink so every output column is
   * materialized — `count()` would let Catalyst prune the expressions
-  * under measurement. One untimed warmup job absorbs JVM/codegen
-  * startup so per-query numbers reflect steady state.
+  * under measurement. An untimed run of each query at the warmup SF
+  * absorbs JVM/codegen startup so per-query numbers reflect steady state.
   */
 object Bench {
 
   /** The committed round-over-round baseline map the driver reads. */
   private[graft] val committedBenchPath = "/root/repo/bench_queries.json"
 
-  /** Path-identity check for the overwrite guards: the r16 guards
-    * compared raw strings, so `/root/repo/../repo/bench_queries.json`
-    * or a relative spelling of the committed path slipped past them.
-    * Canonicalize (resolve symlinks when the file exists, else
-    * normalize the absolute form) before comparing. */
+  /** Path-identity check for the overwrite guards: a raw string compare
+    * lets a `..` or relative spelling of the committed path slip past
+    * them. Canonicalize (resolve
+    * symlinks when the file exists, else normalize the absolute form)
+    * before comparing. */
   private[graft] def sameCanonicalPath(a: String, b: String): Boolean =
     try {
       def canon(s: String): java.nio.file.Path = {
@@ -29,68 +31,45 @@ object Bench {
       canon(a) == canon(b)
     } catch { case _: Throwable => a == b }
 
-  /** HOST-LOAD TELEMETRY (r16 verdict №2): host contention — not code —
-    * was round 16's dominant bench confounder, and the canary cannot see
-    * a load window (it reads flat while every band widens). Sampling
-    * /proc/loadavg into the artifact at run start/mid/end makes
-    * contamination attributable from the artifact alone. The START
-    * sample is the self-certification read: it is taken before any
-    * Spark work ramps, so it reflects EXTERNAL load only; mid/end
-    * include the bench's own contribution and are recorded for
-    * trend-reading. Empty on non-Linux hosts. */
+  /** Host-load telemetry: host contention, not code, is the dominant
+    * confounder of a full run, so /proc/loadavg is sampled into the
+    * artifact at run start/mid/end. The START sample is taken before any
+    * Spark work ramps, so it reflects EXTERNAL load only; mid/end include
+    * the bench's own contribution. Empty on non-Linux hosts. */
   private[graft] def loadAvgNow(): Seq[Double] =
     try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg"))
       .trim.split("\\s+").take(3).map(_.toDouble).toSeq
     catch { case _: Throwable => Seq.empty }
 
-  /** Render the load samples as the artifact's `"loadavg"` field:
-    * `{"start":[1m,5m,15m],"mid":[…],"end":[…]}` (a missing sample
-    * renders as an empty array). Pure so BenchGuardSpec pins it. */
-  private[graft] def loadAvgJson(samples: Seq[(String, Seq[Double])]): String =
-    samples.map { case (k, vs) =>
-      "\"" + k + "\":" + vs.map(v => f"$v%.2f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-
   /** Self-certification bit next to the telemetry: the run STARTED on a
-    * quiet host when the 1-minute load was under `threshold` (default
-    * cores/8 — an entering load above 12.5% of the machine means some
-    * other tenant is already running multi-core work). Advisory only —
-    * it cannot see load that arrives mid-run (the band-width gate
-    * covers that); missing telemetry reads as NOT certified-quiet. */
+    * quiet host when the 1-minute load was under `threshold` (cores/8 —
+    * an entering load above 12.5% of the machine means some other tenant
+    * is already running multi-core work). Advisory only — it cannot see
+    * load that arrives mid-run (the band-width gate covers that); missing
+    * telemetry reads as NOT certified-quiet. */
   private[graft] def loadQuietStart(start: Seq[Double],
       threshold: Double): Boolean =
     start.headOption.exists(_ < threshold)
 
-  /** Query count of an existing bench map on disk (0 if absent or
-    * unparseable). The map is the flat `"queries":{"name":sec,…}`
-    * object this main itself writes — entries carry no nested commas,
-    * so `commas + 1` is exact. */
-  private[graft] def benchMapSize(path: String): Int =
-    try {
-      val txt = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path))
-      """"queries":\{([^}]*)\}""".r.findFirstMatchIn(txt)
-        .map(_.group(1).trim)
-        .map(s => if (s.isEmpty) 0 else s.count(_ == ',') + 1)
-        .getOrElse(0)
-    } catch { case _: Throwable => 0 }
-
-  /** BASELINE-OVERWRITE GUARD (verdict r12 №1 — this exact footgun
-    * shipped a broken committed baseline in BOTH r11 and r12): decide
-    * where the full per-query map is written.
+  /** BASELINE-OVERWRITE GUARD: decide where the full per-query map is
+    * written (a subset run replacing the committed map shipped a broken
+    * baseline twice).
     *
     *  - `SPARK_GRAFT_BENCH_ONLY` set without `SPARK_GRAFT_BENCH_OUT`:
     *    a subset run NEVER touches the committed baseline — it goes to
     *    /tmp, loudly.
+    *  - A full run at a different core count than the committed map
+    *    never lands on the committed path: per-query times are not
+    *    comparable across core counts.
     *  - Any run about to land on the committed path with FEWER queries
-    *    than the map already there is refused (diverted to /tmp)
-    *    unless `SPARK_GRAFT_BENCH_FORCE` is set — a full-registry map
-    *    only ever grows; a shrink is either the subset mistake or a
-    *    deliberate registry cut, and the latter must say so.
+    *    than the map already there is refused (diverted to /tmp) — a
+    *    full-registry map only ever grows; a shrink is either the subset
+    *    mistake or a deliberate registry cut, and the latter must say so.
     *
-    * Pure so BenchGuardSpec can pin every branch. Returns (path,
-    * optional warning to print). */
+    * `force` (`SPARK_GRAFT_BENCH_FORCE`) lifts the last two for a
+    * deliberate re-baseline. Pure so BenchGuardSpec can pin every
+    * branch. Returns (path, optional warning to print). */
   private[graft] def resolveBenchOut(requested: Option[String],
       onlySet: Boolean, force: Boolean, newCount: Int,
       existingCount: Int, runCpus: Int = 0,
@@ -101,11 +80,6 @@ object Bench {
       (base, Some("SPARK_GRAFT_BENCH_ONLY is set and SPARK_GRAFT_BENCH_OUT "
         + s"is not: a subset run never writes $committedBenchPath; "
         + s"writing $base instead"))
-    // CORE-COUNT GUARD (r18 verdict №3: the driver's 8-core scaling run
-    // passed the subset+shrink checks and overwrote the committed
-    // 32-core map, skewing LPT order / reps classes / inflation
-    // baselines for every later run). A full run at a different core
-    // count than the committed map never lands on the committed path.
     else if (sameCanonicalPath(base, committedBenchPath)
         && runCpus > 0 && committedCpus.exists(_ != runCpus) && !force)
       ("/tmp/bench_queries_wrongcpus.json",
@@ -125,55 +99,114 @@ object Bench {
     else (base, None)
   }
 
-  /** Per-query medians of an existing bench map (empty if absent):
-    * feeds the adaptive-reps rule below. */
-  private[graft] def parseBenchTimes(path: String): Map[String, Double] =
-    try {
-      val txt = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(path))
-      parseFlatMap(txt, "queries").map { case (k, v) => k -> v.head }
-    } catch { case _: Throwable => Map.empty }
-
-  /** Parse a flat `"<field>":{"name":1.0,…}` or
-    * `"<field>":{"name":[1.0,2.0],…}` object out of a bench JSON line —
-    * the only two shapes this main writes. */
-  private[graft] def parseFlatMap(json: String,
-      field: String): Map[String, Seq[Double]] = {
-    val obj = ("\"" + field + """":\{(.*?)\}(?=,"|\}$|$)""").r
-      .findFirstMatchIn(json).map(_.group(1)).getOrElse(return Map.empty)
-    """"([A-Za-z0-9_]+)":(\[[^\]]*\]|-?[0-9.]+)""".r
-      .findAllMatchIn(obj).map { m =>
-        val vals = m.group(2).stripPrefix("[").stripSuffix("]")
-          .split(",").filter(_.nonEmpty).map(_.trim.toDouble).toSeq
-        m.group(1) -> vals
-      }.toMap
-  }
-
-  /** One query's timings in a bench artifact: the reported median plus
-    * the [lo,hi] NOISE BAND across that run's reps. Old maps without a
-    * bands field degrade to a zero-width band at the median. */
+  /** One query's timings: the reported median plus the [lo,hi] NOISE
+    * BAND across that run's reps. */
   private[graft] case class BenchEntry(median: Double, lo: Double, hi: Double)
 
-  private[graft] def parseBenchEntries(json: String): Map[String, BenchEntry] = {
-    val medians = parseFlatMap(json, "queries")
-      .collect { case (k, Seq(v)) if v >= 0 => k -> v }
-    val bands = parseFlatMap(json, "bands")
-    medians.map { case (k, m) =>
-      bands.get(k) match {
-        case Some(Seq(lo, hi)) => k -> BenchEntry(m, lo, hi)
-        case _ => k -> BenchEntry(m, m, m)
-      }
-    }
+  /** A timing as the artifact and the per-query lines write it. */
+  private def sec(v: Double): JValue = JDouble(math.round(v * 1000) / 1000.0)
+
+  /** The bench artifact (`bench_queries.json`): every field this main
+    * writes, with the one writer ([[BenchMap.toJson]]) and the one reader
+    * ([[BenchMap.parse]]) of its JSON form. `queries` is in run order
+    * with -1 for a failed query; `value` totals the green headline
+    * medians and `valueAll` every green median. */
+  private[graft] case class BenchMap(
+      value: Double, valueAll: Double, failed: Int,
+      cpus: Option[Int], sf: Option[String],
+      queries: Seq[(String, Double)],
+      bands: Map[String, (Double, Double)],
+      nonHeadline: Seq[(String, String)],
+      loadavg: Seq[(String, Seq[Double])],
+      loadQuietStart: Boolean,
+      contamination: Option[String]) {
+
+    /** The green queries with their bands; a query the map holds no band
+      * for reads as a zero-width band at its median. */
+    def entries: Map[String, BenchEntry] = queries.collect {
+      case (k, m) if m >= 0 =>
+        val (lo, hi) = bands.getOrElse(k, (m, m))
+        k -> BenchEntry(m, lo, hi)
+    }.toMap
+
+    def toJson: JObject =
+      JObject(
+        "metric" -> JString("total"),
+        "value" -> sec(value),
+        "unit" -> JString("sec"),
+        "cpus" -> cpus.fold[JValue](JNothing)(JInt(_)),
+        "queries" -> JObject(queries.map { case (k, v) => k -> sec(v) }.toList),
+        "bands" -> JObject(queries.toList.flatMap { case (k, _) =>
+          bands.get(k).map { case (lo, hi) => k -> JArray(List(sec(lo), sec(hi))) }
+        }),
+        "non_headline" -> JArray(nonHeadline.map { case (n, why) =>
+          JObject("name" -> JString(n), "reason" -> JString(why)) }.toList),
+        "value_all" -> sec(valueAll),
+        "failed" -> JInt(failed),
+        "loadavg" -> JObject(loadavg.map { case (k, vs) =>
+          k -> JArray(vs.map(v => JDouble(math.round(v * 100) / 100.0)).toList)
+        }.toList),
+        "load_quiet_start" -> JBool(loadQuietStart),
+        "contaminated" -> JBool(contamination.isDefined),
+        "contamination_reason" -> contamination.fold[JValue](JNothing)(JString(_)),
+        "sf" -> sf.fold[JValue](JNothing)(JString(_)))
   }
 
-  /** BAND-AWARE round-over-round compare (r14 verdict №2): 29 sub-second
-    * queries swung >1.3× between same-code runs, and every round burned
-    * a §6 canary→isolated→bisect cycle re-attributing noise. A move is
-    * only a MOVER when the two runs' noise bands are DISJOINT beyond
-    * `margin` — new.lo > old.hi·margin is a regression, new.hi <
-    * old.lo/margin an improvement; overlapping bands are by construction
-    * the same measurement. Queries present on one side only are new or
-    * removed, not movers. */
+  private[graft] object BenchMap {
+    /** Reads any map this main has written; a field an older map lacks
+      * reads as empty, `None` or `false`. */
+    def parse(json: String): BenchMap = {
+      val j = JsonMethods.parse(json)
+      def num(v: JValue): Option[Double] = v match {
+        case JDouble(d) => Some(d)
+        case JInt(i) => Some(i.toDouble)
+        case _ => None
+      }
+      def str(v: JValue): Option[String] =
+        v match { case JString(s) => Some(s); case _ => None }
+      def fields(k: String): List[(String, JValue)] =
+        j \ k match { case JObject(fs) => fs; case _ => Nil }
+      BenchMap(
+        value = num(j \ "value").getOrElse(0.0),
+        valueAll = num(j \ "value_all").getOrElse(0.0),
+        failed = num(j \ "failed").fold(0)(_.toInt),
+        cpus = num(j \ "cpus").map(_.toInt),
+        sf = str(j \ "sf"),
+        queries = fields("queries").flatMap { case (k, v) => num(v).map(k -> _) },
+        bands = fields("bands").flatMap {
+          case (k, JArray(List(lo, hi))) =>
+            for (l <- num(lo); h <- num(hi)) yield k -> (l, h)
+          case _ => None
+        }.toMap,
+        nonHeadline = j \ "non_headline" match {
+          case JArray(xs) => xs.flatMap(x => str(x \ "name").map(n =>
+            n -> str(x \ "reason").getOrElse("")))
+          case _ => Nil
+        },
+        loadavg = fields("loadavg").map {
+          case (k, JArray(vs)) => k -> vs.flatMap(num)
+          case (k, _) => k -> Nil
+        },
+        loadQuietStart = (j \ "load_quiet_start") == JBool(true),
+        contamination =
+          if ((j \ "contaminated") == JBool(true))
+            Some(str(j \ "contamination_reason").getOrElse(""))
+          else None)
+    }
+
+    /** The map at `path`, or `None` when it is absent or unreadable. */
+    def read(path: String): Option[BenchMap] =
+      try Some(parse(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(path))))
+      catch { case _: Throwable => None }
+  }
+
+  /** BAND-AWARE round-over-round compare: same-code runs swing >1.3× on
+    * sub-second queries, so a move is only a MOVER when the two runs'
+    * noise bands are DISJOINT beyond `margin` — new.lo > old.hi·margin is
+    * a regression, new.hi < old.lo/margin an improvement; overlapping
+    * bands are by construction the same measurement. Queries present on
+    * one side only are new or removed, not movers. */
   private[graft] def moversOutsideBand(
       old: Map[String, BenchEntry], nw: Map[String, BenchEntry],
       margin: Double = 1.25): Seq[(String, String)] =
@@ -186,34 +219,18 @@ object Bench {
       else None
     }
 
-  /** Scale factor a bench map was measured at (the `"sf"` field this
-    * main writes), for refusing cross-SF band compares. */
-  private[graft] def parseSfField(json: String): Option[String] =
-    """"sf":"([^"]*)"""".r.findFirstMatchIn(json).map(_.group(1))
-
-  /** Core count a bench map was measured at (the `"cpus"` field this
-    * main stamps since r19; absent in older maps). An 8-core full run
-    * passes the subset/shrink guards and silently poisoned the
-    * committed 32-core baseline in r18 (verdict №3) — the stamp is
-    * what lets [[resolveBenchOut]] refuse that class of overwrite. */
-  private[graft] def parseCpusField(json: String): Option[Int] =
-    """"cpus":([0-9]+)""".r.findFirstMatchIn(json).map(_.group(1).toInt)
-
   /** The regression class [[moversOutsideBand]] cannot see: a query
     * that was committed GREEN and recorded the -1 FAILURE sentinel this
-    * run (parseBenchEntries drops sentinels, so it silently leaves the
-    * compared keyset — the worst mover must not be the invisible one). */
+    * run (it has no entry, so it silently leaves the compared keyset —
+    * the worst mover must not be the invisible one). */
   private[graft] def failedMovers(committed: Map[String, Double],
       ran: Seq[(String, Double)]): Seq[String] =
     ran.collect { case (name, t) if t < 0 &&
       committed.get(name).exists(_ >= 0) => name }.sorted
 
-  /** RUN-LEVEL LOAD DETECTOR (round-16 lesson): a host-contention
-    * window during a full run widens per-query [min,max] bands 2-4×
-    * across UNRELATED queries while the 3-point canary can still read
-    * flat — the round-16 close run landed exactly such a map on the
-    * committed path and it had to be reverted by hand. The detector is
-    * the within-run band width itself: median relative width
+  /** RUN-LEVEL LOAD DETECTOR: a host-contention window during a full run
+    * widens per-query [min,max] bands 2-4× across UNRELATED queries. The
+    * detector is the within-run band width itself: median relative width
     * (hi−lo)/median over the run's measured queries, compared to the
     * committed map's. Returns Some(reason) when the new run is ≥
     * `factor`× noisier than the committed baseline (both maps needing
@@ -241,13 +258,12 @@ object Bench {
     }
   }
 
-  /** Second contamination face (the round-16 close run's actual
-    * signature): 39 of 370 queries printed as REGRESSED disjoint-band
-    * movers at once, across unrelated operator files. A real code
-    * change regresses the queries it touches; host contention regresses
-    * a broad random sample. ≥ `minCount` regressions AND ≥ `minFrac` of
-    * the compared set → the run is suspect and must not silently become
-    * the baseline. Pure so BenchGuardSpec pins it. */
+  /** Second contamination face: many queries regressing beyond their
+    * bands at once, across unrelated operator files. A real code change
+    * regresses the queries it touches; host contention regresses a broad
+    * random sample. ≥ `minCount` regressions AND ≥ `minFrac` of the
+    * compared set → the run is suspect and must not silently become the
+    * baseline. Pure so BenchGuardSpec pins it. */
   private[graft] def massRegression(regressed: Int, compared: Int,
       minCount: Int = 15, minFrac: Double = 0.05): Option[String] =
     if (compared > 0 && regressed >= minCount &&
@@ -257,55 +273,13 @@ object Bench {
         "a broad random sample regressing is host contention")
     else None
 
-  /** MULTI-PASS MERGE (round 18). The round-17/18 close attempts found
-    * the host's contention is not a constant background but RECURRING
-    * STALL WINDOWS sweeping the run: two same-code full runs each
-    * tripped the mass-regression gate with ~40 disjoint-band movers,
-    * but the movers were DIFFERENT queries each time and their run
-    * positions came in contiguous bursts (44 of 68 position gaps ≤ 2 in
-    * the second run — stalled spans, not stalled queries). No single
-    * pass can land clean under that regime, and waiting for a stall-free
-    * 40-minute window is a lottery. The estimator that is robust to
-    * one-sided positive noise is the MIN OF PASS-MEDIANS: repeat the
-    * whole timed sweep P times and, per query, keep the cleanest pass —
-    * a query is only misestimated if a stall hit it in EVERY pass
-    * (p_stall^P, vanishing for P ≥ 3 at the observed ~18% stall
-    * coverage). Each element is (name, median, Some(repLo, repHi)) from
-    * one pass, in run order; the merged band is [min rep anywhere,
-    * cleanest pass's rep max] — the tightest envelope an actually-clean
-    * measurement produced. A query that failed in some passes but ran
-    * green in another keeps the green timing; -1 only when every pass
-    * failed. Pure so BenchGuardSpec pins it. */
-  private[graft] def mergePasses(
-      passes: Seq[Seq[(String, Double, Option[(Double, Double)])]])
-      : Seq[(String, Double, Option[(Double, Double)])] = {
-    require(passes.nonEmpty, "mergePasses needs at least one pass")
-    passes.head.map(_._1).map { n =>
-      val rows = passes.flatMap(_.find(_._1 == n))
-      val ok = rows.filter(_._2 >= 0)
-      if (ok.isEmpty) (n, -1.0, None)
-      else {
-        val best = ok.minBy(_._2)
-        val repLos = ok.flatMap(_._3.map(_._1))
-        val lo = if (repLos.isEmpty) best._2
-          else math.min(repLos.min, best._2)
-        val hi = best._3.map(_._2).getOrElse(best._2)
-        (n, best._2, Some((lo, math.max(hi, best._2))))
-      }
-    }
-  }
-
-  /** Reps for one query: an explicit SPARK_GRAFT_BENCH_REPS wins
-    * everywhere (the §6 isolated-REPS protocol depends on that);
-    * otherwise sub-second-committed (or not-yet-committed) queries get
-    * median-of-5 — the noise class — and second-plus queries keep the
-    * cheap default. Pure so BenchGuardSpec pins it. */
-  private[graft] def adaptiveReps(committedSec: Option[Double],
-      explicitReps: Option[Int], default: Int = 2): Int =
-    explicitReps.getOrElse {
-      if (committedSec.forall(t => t >= 0 && t < 1.0)) math.max(default, 5)
-      else default
-    }
+  /** Reps for one query: sub-second-committed (or not-yet-committed)
+    * queries — the class whose same-code runs swing most — get
+    * median-of-5; second-plus queries get median-of-2, where 5 reps
+    * would multiply the wall cost and buy nothing. Pure so
+    * BenchGuardSpec pins it. */
+  private[graft] def adaptiveReps(committedSec: Option[Double]): Int =
+    if (committedSec.forall(t => t >= 0 && t < 1.0)) 5 else 2
 
   /** Headline set: every operator family, weighted toward the heavy
     * scan/join/shuffle paths that dominate at scale. */
@@ -503,283 +477,34 @@ object Bench {
     "q_ivm_retract",
     "q_neyman_alloc")
 
-  /** CONCURRENT-INTERFERENCE MODE (r15 verdict №6): a 100 TB cluster
-    * serves many users at once, and nothing in the serial bench
-    * measures the engine under concurrency. With
-    * `SPARK_GRAFT_BENCH_POOLS=N` (N ≥ 2), the headline set runs across
-    * N fair-scheduler pools — N driver threads pull queries off one
-    * queue, each thread pinned to its own pool so Spark's FAIR
-    * scheduler interleaves their stages — and the artifact records the
-    * aggregate wall time, each query's under-concurrency time, and the
-    * p50/p95 of per-query inflation vs the committed SERIAL baseline.
-    * Writes its own artifact (bench_concurrent.json; never the
-    * committed serial map). The driver never sets the env var, so
-    * round artifacts stay serial and comparable. */
-  /** Per-QUERY resource attribution under concurrency (r17 verdict №3:
-    * the 4-pool tail had unexplained outliers — q_strip_spans 1.5 s
-    * serial → 31.8 s — and the artifact carried no mechanism evidence).
-    * Each worker thread tags its current query as the job group; this
-    * listener maps job → stages → task metrics, so every pool run can
-    * report WHERE an inflated query's wall went: executor run time vs
-    * GC vs shuffle-fetch wait vs spill. Attribution is per job group —
-    * a stage shared via exchange reuse lands on whichever query ran it
-    * first, which is the right charge (the other query got it free). */
-  private final class PoolAttribution
-      extends org.apache.spark.scheduler.SparkListener {
-    private val stageQuery =
-      new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    // query -> (executorRunMs, gcMs, fetchWaitMs, spilledBytes)
-    val metrics =
-      new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
-    override def onJobStart(
-        j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val q = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-      q.foreach(g => j.stageIds.foreach(s => stageQuery.put(s, g)))
-    }
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val q = stageQuery.get(sc.stageInfo.stageId)
-      val m = sc.stageInfo.taskMetrics
-      if (q != null && m != null) {
-        val a = metrics.computeIfAbsent(q, _ => Array.fill(4)(0L))
-        a.synchronized {
-          a(0) += m.executorRunTime
-          a(1) += m.jvmGCTime
-          a(2) += m.shuffleReadMetrics.fetchWaitTime
-          a(3) += m.memoryBytesSpilled + m.diskBytesSpilled
-        }
-      }
-    }
-  }
-
-  /** Telemetry splice for one pool-count run (r17 verdict №7: the
-    * session-level loadavg could not certify the 8-pool run
-    * independently of the 4-pool run before it). Pure so
-    * BenchGuardSpec pins the shape. */
-  private[graft] def concurrentRunJson(core: String,
-      loadJson: String, hotspotsJson: String): String =
-    core.stripSuffix("}") +
-      s""","loadavg":$loadJson,"hotspots":$hotspotsJson}"""
-
-  private def runConcurrent(poolCounts: Seq[Int]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadStart = loadAvgNow()
-    val spark = GraftSession.create("graft-bench-pools",
-      extraConf = Map("spark.scheduler.mode" -> "FAIR"))
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1L << 20).selectExpr("sum(id)").collect()
-    try Indexes.prebuild(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] index prebuild failed: ${e.getMessage}")
-    }
-    // Scope (r16 verdict №4): SPARK_GRAFT_BENCH_SCOPE=all widens the
-    // concurrent run from the 192-query headline to the FULL registry —
-    // the heavier non-headline queries are exactly where the inflation
-    // tail grows under contention, so the multi-tenant answer needs them.
-    val scopeAll = sys.env.get("SPARK_GRAFT_BENCH_SCOPE").contains("all")
-    val selected =
-      if (scopeAll)
-        headline.filter(SparkEntry.queries.contains) ++
-          (SparkEntry.queries.keySet -- headline).toSeq.sorted
-      else headline.filter(SparkEntry.queries.contains)
-    // Serial warmup pass (untimed) AT THE BENCH SF — not the tiny
-    // warmup corpus the serial mode uses: AQE re-plans per actual data
-    // size, so sf0.001-shaped codegen misses at sf0.1 and four pools
-    // then serialize on janino's global compile lock — the first run of
-    // this mode measured an ~80 s all-pools stall window (p95 inflation
-    // 37×) from exactly that. Warming at sfDir caches the real plans'
-    // generated classes; the concurrent pass then measures steady-state
-    // CONTENTION (scheduler, memory, shuffle), which is the question a
-    // multi-tenant 100 TB cluster actually asks.
-    selected.foreach { n =>
-      try SparkEntry.queries(n)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-    // The committed SERIAL baseline the inflation stats divide by —
-    // REFUSED when it was measured at a different scale factor (the
-    // same cross-SF rule the serial band compare applies): a 4-pool
-    // sf0.1 run divided by sf0.01 serial medians records meaningless
-    // ratios, so speedup/inflation emit the -1 sentinel instead.
-    val committed: Map[String, Double] =
-      try {
-        val json = java.nio.file.Files.readString(
-          java.nio.file.Paths.get(committedBenchPath))
-        val committedSf = parseSfField(json)
-        if (committedSf.exists(_ != sfDir)) {
-          System.err.println(s"[bench] inflation stats SKIPPED: committed " +
-            s"serial map was measured at ${committedSf.get}, this run at " +
-            s"$sfDir — cross-SF ratios are not inflation; emitting -1")
-          Map.empty
-        } else parseBenchTimes(committedBenchPath)
-      } catch { case _: Throwable => Map.empty }
-
-    // One timed pass per requested pool count (SPARK_GRAFT_BENCH_POOLS
-    // is a comma list, e.g. "4,8"), all sharing the warmed session so
-    // the runs differ only in concurrency.
-    // LPT (longest-processing-time-first) queue order, by committed
-    // serial median: the first full-registry run used registry order
-    // and the heavy iterative queries (q_script_median 103 s under
-    // 4 pools) landed LAST, running against idle pools — the classic
-    // makespan tail. Longest-first overlaps them with the small-query
-    // swarm instead; queries with no committed time sort first
-    // (unknown = assume heavy).
-    val ordered = selected.sortBy(n => -committed.getOrElse(n, 3600.0))
-    val attribution = new PoolAttribution
-    spark.sparkContext.addSparkListener(attribution)
-
-    val runJsons = poolCounts.map { pools =>
-      val queue = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      ordered.foreach(queue.add)
-      val times = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-      attribution.metrics.clear() // fresh attribution per pool count
-      val runLoadStart = loadAvgNow() // per-run samples (r17 verdict №7)
-      System.gc()
-      val t0 = System.nanoTime()
-      val workers = (0 until pools).map { i =>
-        new Thread(() => {
-          spark.sparkContext.setLocalProperty("spark.scheduler.pool", s"pool$i")
-          var n = queue.poll()
-          while (n != null) {
-            val s0 = System.nanoTime()
-            try {
-              // Job group = query name: every job (and so stage) this
-              // thread launches is attributed to `n` for the hotspot
-              // breakdown — see PoolAttribution.
-              spark.sparkContext.setJobGroup(n, n, false)
-              SparkEntry.queries(n)(spark, sfDir)
-                .write.format("noop").mode("overwrite").save()
-              times.put(n, (System.nanoTime() - s0) / 1e9)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] $n FAILED under concurrency: " +
-                e.getMessage)
-              times.put(n, -1.0)
-            } finally spark.sparkContext.clearJobGroup()
-            n = queue.poll()
-          }
-        }, s"bench-pool-$i")
-      }
-      workers.foreach(_.start())
-      workers.foreach(_.join())
-      val wall = (System.nanoTime() - t0) / 1e9
-      val runLoadEnd = loadAvgNow()
-      import scala.jdk.CollectionConverters._
-      val result = times.asScala.toMap
-      val failed = result.count(_._2 < 0)
-      // Inflation vs the committed SERIAL medians: >1 = slower under
-      // concurrency (contention), <1 = faster (still plausible: idle
-      // cores absorb a query that underfills the machine alone).
-      val ratios = result.toSeq.collect {
-        case (n, t) if t > 0 && committed.get(n).exists(_ > 0) =>
-          t / committed(n)
-      }.sorted
-      def pct(p: Double): Double =
-        if (ratios.isEmpty) -1.0
-        else ratios(math.min(ratios.size - 1, (p * ratios.size).toInt))
-      val serialTotal =
-        if (committed.isEmpty) -1.0
-        else selected.flatMap(committed.get).filter(_ > 0).sum
-      val speedup =
-        if (serialTotal <= 0) -1.0 else serialTotal / math.max(wall, 1e-9)
-      val qs = selected.filter(result.contains)
-        .map(n => "\"" + n + f"\":${result(n)}%.3f").mkString("{", ",", "}")
-      result.toSeq.sortBy(_._1).foreach { case (k, v) =>
-        println(f"""{"query":"$k","sec":$v%.3f,"mode":"concurrent","pools":$pools}""") }
-      // Hotspot breakdown (r17 verdict №3): the 8 worst inflators with
-      // their attributed task-metric split, so a 20× outlier carries
-      // its own mechanism evidence (GC vs fetch-wait vs spill vs plain
-      // executor time) in the artifact instead of a next-round puzzle.
-      val ratioByQ = result.collect {
-        case (n, t) if t > 0 && committed.get(n).exists(_ > 0) =>
-          n -> t / committed(n)
-      }
-      val hotspots = ratioByQ.toSeq.sortBy(-_._2).take(8).map {
-        case (n, infl) =>
-          val a = Option(attribution.metrics.get(n))
-            .getOrElse(Array.fill(4)(0L))
-          f"""{"query":"$n","inflation":$infl%.2f,"concurrent_s":${
-            result(n)}%.3f,"serial_s":${committed(n)}%.3f,""" +
-            s""""executor_run_ms":${a(0)},"gc_ms":${a(1)},""" +
-            s""""fetch_wait_ms":${a(2)},"spilled_mb":${
-              math.round(a(3) / 1e6)}}"""
-      }.mkString("[", ",", "]")
-      val runLoad = loadAvgJson(Seq(
-        "start" -> runLoadStart, "end" -> runLoadEnd))
-      val core =
-        f"""{"metric":"concurrent_wall","value":$wall%.3f,"unit":"sec","pools":$pools,"n":${result.size},"failed":$failed,"serial_committed_total":$serialTotal%.3f,"speedup_vs_serial":$speedup%.3f,"inflation_p50":${pct(0.50)}%.3f,"inflation_p95":${pct(0.95)}%.3f,"queries":$qs,"sf":"$sfDir"}"""
-      concurrentRunJson(core, runLoad, hotspots)
-    }
-    val loadEnd = loadAvgNow()
-    val loadJson = loadAvgJson(Seq("start" -> loadStart, "end" -> loadEnd))
-    val outPath = resolveConcurrentOut(sys.env.get("SPARK_GRAFT_BENCH_OUT"))
-    // Single pool count keeps the r15 single-object artifact shape (plus
-    // the telemetry); a multi-count run nests one object per count.
-    val artifact =
-      if (runJsons.size == 1)
-        // each run object now carries its own "loadavg" (r17 verdict
-        // №7), so the session-level pair gets a distinct key
-        runJsons.head.stripSuffix("}") +
-          s""","session_loadavg":$loadJson}"""
-      else
-        s"""{"metric":"concurrent_multi","sf":"$sfDir","scope":"${if (scopeAll) "all" else "headline"}","loadavg":$loadJson,"runs":[${runJsons.mkString(",")}]}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(outPath), artifact)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
-    }
-    runJsons.foreach { j =>
-      val summary = """"queries":\{[^}]*\},?""".r.replaceAllIn(j, "")
-        .stripSuffix("}") + s""","queries_file":"$outPath"}"""
-      println(summary)
-    }
-    spark.stop()
-  }
-
-  /** Concurrent-mode output path: NEVER the committed serial map — a
-    * pools run's numbers are under-contention latencies, and landing
-    * them where the band compare reads its serial baseline would flag
-    * every query as a regression next round (the r11/r12
-    * overwrite-incident class, concurrent flavor). Pure so
-    * BenchGuardSpec pins it. */
-  private[graft] def resolveConcurrentOut(requested: Option[String]): String =
-    requested match {
-      case Some(p) if sameCanonicalPath(p, committedBenchPath) =>
-        System.err.println("[bench] REFUSING to write the concurrent " +
-          s"artifact over the committed serial map $committedBenchPath; " +
-          "writing /root/repo/bench_concurrent.json instead")
-        "/root/repo/bench_concurrent.json"
-      case Some(p) => p
-      case None => "/root/repo/bench_concurrent.json"
-    }
-
-  /** Parse SPARK_GRAFT_BENCH_POOLS — a comma list of pool counts, e.g.
-    * "4" or "4,8". Non-numeric input is rejected LOUDLY to stderr and
-    * the run falls through to serial mode (an unattended driver run
-    * must still produce its artifact); counts < 2 are dropped (one
-    * pool IS the serial mode). Pure so BenchGuardSpec pins it. */
-  private[graft] def parsePoolCounts(raw: Option[String],
-      warn: String => Unit = m => System.err.println(s"[bench] $m")): Seq[Int] =
-    raw match {
-      case None => Seq.empty
-      case Some(s) =>
-        scala.util.Try(s.split(",").map(_.trim).filter(_.nonEmpty)
-          .map(_.toInt).toSeq) match {
-          case scala.util.Success(ps) => ps.filter(_ > 1)
-          case scala.util.Failure(_) =>
-            warn(s"SPARK_GRAFT_BENCH_POOLS='$s' is not a comma-separated " +
-              "integer list; ignoring it and running the serial bench")
-            Seq.empty
-        }
-    }
+  /** Why each non-headline query is outside the headline total. Most
+    * share the default: the headline set froze so its total stays
+    * comparable round-over-round, and later additions are timed
+    * identically but accumulate in `value_all` instead. */
+  private val nonHeadlineReasons: Map[String, String] = Map(
+    "q_script_median" -> ("SQL-scripting control flow: ~26 sequential"
+      + " COUNT probes pay per-statement job latency by design"),
+    "q_ann_recall" -> "evaluation companion of headlined q_ann_ivf",
+    "q_mv_rewrite" -> ("plan-rewrite demonstration; its data path is"
+      + " the headlined monthly aggregate read from the view"),
+    "q_mv_rewrite_filtered" -> ("plan-rewrite demonstration: the"
+      + " filter-over-view containment case, view scan + pushed filter"),
+    "q_mv_rewrite_join" -> ("plan-rewrite demonstration: the"
+      + " join-over-view containment case, dim joins over the view scan"),
+    "q_approx_distinct_users" -> ("5-row HLL aggregate; headline"
+      + " covers HLL via q_heavy_hitters-family scans"),
+    "q_param_sql" -> "SQL-surface variant of a headlined query shape",
+    "q_pipe_sql" -> "SQL-surface variant of a headlined query shape",
+    "q_avro_evolution" -> "codec variant of headlined q_avro_roundtrip",
+    "q_csv_roundtrip" -> "format variant of headlined q_orc_roundtrip",
+    "q_json_roundtrip" -> "format variant of headlined q_orc_roundtrip",
+    "q_xml_roundtrip" -> "format variant of headlined q_orc_roundtrip")
+    .withDefaultValue("added after the round-10 headline freeze (total " +
+      "stays round-over-round comparable); timed identically, in value_all")
 
   def main(args: Array[String]): Unit = {
-    val poolCounts = parsePoolCounts(sys.env.get("SPARK_GRAFT_BENCH_POOLS"))
-    if (poolCounts.nonEmpty) { runConcurrent(poolCounts); return }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val loadSamples =
-      scala.collection.mutable.LinkedHashMap[String, Seq[Double]](
-        "start" -> loadAvgNow())
+    val loadStart = loadAvgNow()
     val spark = GraftSession.create("graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
@@ -788,83 +513,43 @@ object Bench {
     // Per-query warmup at the smallest SF (untimed): a cold first run is
     // dominated by Catalyst planning + janino codegen compilation
     // (~2s/query), which is a per-query-shape constant, not a data cost —
-    // at 100 TB it is noise, at sf0.1 it would swamp the signal. Timing
-    // after one tiny-SF run reports steady-state throughput, the number
-    // that actually extrapolates. Standard JMH-style practice.
+    // at sf0.1 it would swamp the signal.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR",
       "/root/testdata/sf0.001")
     val doWarm = new java.io.File(warmDir).isDirectory && warmDir != sfDir
 
-    // Untimed: force the build-once corpus indexes (token/CC/BPE/PQ/IVF)
-    // for the BENCHED dir, so serve-path queries are timed as serve paths
-    // — index build is per-corpus ingest work, like the testdata itself.
+    // Untimed: build every declared corpus artifact for the BENCHED dir,
+    // so serve-path queries are timed as serve paths — an artifact build
+    // is per-corpus ingest work, like the testdata itself.
     try Indexes.prebuild(spark, sfDir)
     catch { case e: Throwable =>
       System.err.println(s"[bench] index prebuild failed: ${e.getMessage}")
     }
 
-    // Local-iteration escape hatch: SPARK_GRAFT_BENCH_ONLY=q_a,q_b runs
-    // just those queries (the driver never sets it, so round artifacts
-    // always carry the full headline set).
+    // SPARK_GRAFT_BENCH_ONLY=q_a,q_b times just those queries. Otherwise
+    // EVERY registered query is timed: headline queries feed `value`, the
+    // rest `value_all`, so a regression anywhere shows in the artifact.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     val selected = headline.filter(SparkEntry.queries.contains)
       .filter(n => only.forall(_.contains(n)))
-    // Round-10 verdict: exclusions from the headline set must be
-    // machine-readable, not a hand-maintained invisible list — so EVERY
-    // registered query is timed. Headline queries feed the
-    // round-over-round `value` total (comparable across rounds);
-    // everything else is timed identically and reported under
-    // `non_headline` so a perf regression anywhere in the registry
-    // shows up in the round artifact.
     val nonHeadline = (SparkEntry.queries.keySet -- headline)
       .toSeq.sorted.filter(n => only.forall(_.contains(n)))
 
-    // Steady-state controls (SURVEY §6): a full 118-query run drifts
-    // 1.7-1.8s/query late in the run from accumulated GC/codegen-cache
-    // pressure, so each timed measurement is preceded by a System.gc()
-    // and REPS>1 takes the per-query MEDIAN of independent timings —
-    // the band across full runs is what the round-over-round compare
-    // reads, so it must be narrower than the effects being judged.
-    //
-    // ADAPTIVE REPS (r14 verdict №2): sub-second queries are where
-    // same-code runs swing >1.3× (29 of them did between the two r14
-    // runs), so when REPS is not explicitly set, any query whose
-    // COMMITTED time is <1 s (or that has no committed time yet) is
-    // measured with median-of-5 instead of the default 2; second-plus
-    // queries keep the cheap default — their signal-to-noise is already
-    // fine and 5 reps would triple the wall cost where it buys nothing.
-    // An explicit SPARK_GRAFT_BENCH_REPS wins everywhere (the §6
-    // isolated-REPS protocol depends on that).
-    val repsExplicit = sys.env.get("SPARK_GRAFT_BENCH_REPS")
-      .map(_.trim.toInt.max(1))
-    val reps = repsExplicit.getOrElse(2)
-    val committedTimes = parseBenchTimes(committedBenchPath)
-    def repsFor(name: String): Int =
-      adaptiveReps(committedTimes.get(name), repsExplicit, reps)
-    val doGc = !sys.env.get("SPARK_GRAFT_BENCH_GC").contains("0")
+    val committed = BenchMap.read(committedBenchPath)
+    val committedTimes = committed.fold(Map.empty[String, Double])(_.queries.toMap)
 
-    // A failed query records -1 (a sentinel the driver can see — never a
-    // bogus sub-second "timing") and is excluded from the headline total.
-    // Every timed measurement also records its RUN POSITION (0-based
-    // index in the run order), so late-run drift is attributable, and
-    // its NOISE BAND [min,max] across the reps, so the round-over-round
-    // compare can tell a code move from measurement noise (see
-    // moversOutsideBand).
-    val runPos = new java.util.concurrent.atomic.AtomicInteger(0)
-    val positions = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val bandsOut =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    def timeOne(name: String): (String, Double, Option[(Double, Double)]) = {
+    // Each rep is preceded by a System.gc(): a full run otherwise drifts
+    // late from accumulated GC pressure. The median of the reps is the
+    // timing, [min,max] its band; a failure is None, recorded as -1 (a
+    // sentinel a reader of the output can see) and excluded from the totals.
+    def timeOne(name: String): (String, Option[BenchEntry]) = {
       val fn = SparkEntry.queries(name)
       if (doWarm)
         try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
-      // Run position is the FIRST pass's index — later passes revisit
-      // the same order, so position stays the attribution key it was.
-      if (!positions.contains(name)) positions(name) = runPos.getAndIncrement()
-      val times = (1 to repsFor(name)).map { _ =>
-        if (doGc) System.gc()
+      val times = (1 to adaptiveReps(committedTimes.get(name))).map { _ =>
+        System.gc()
         val t0 = System.nanoTime()
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -874,205 +559,70 @@ object Bench {
           -1.0
         }
       }
-      val t = if (times.exists(_ < 0)) -1.0
-        else times.sorted.apply((times.size - 1) / 2) // lower median
-      (name, t, if (t >= 0) Some((times.min, times.max)) else None)
+      name -> (if (times.exists(_ < 0)) None
+        else Some(BenchEntry(times.sorted.apply((times.size - 1) / 2),
+          times.min, times.max)))
     }
 
-    // CANARY (round-11 verdict №1): BENCH_r11's +32.7% uniform shift was
-    // indistinguishable, from the artifact alone, between host/JVM-state
-    // drift and a real across-the-board regression. One FIXED query is
-    // re-measured with the identical discipline at run START, MIDDLE
-    // (after the headline set) and END (after the non-headline sweep);
-    // its inflation across the run measures within-run drift, and its
-    // start value across ROUNDS measures host drift — a code regression
-    // moves queries relative to the canary, host drift moves the canary
-    // itself. Normalization rule (SURVEY §6): divide round-over-round
-    // per-query ratios by the canary-start ratio before reading them.
-    val canaryName = "q1_pricing_summary"
-    def canaryRun(): Double = {
-      val fn = SparkEntry.queries(canaryName)
-      val times = (1 to repsFor(canaryName)).map { _ =>
-        if (doGc) System.gc()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-      }
-      if (times.exists(_ < 0)) -1.0
-      else times.sorted.apply((times.size - 1) / 2)
-    }
-    // Warm the canary's shape once so canary_start is steady-state, not
-    // first-plan codegen cost (headline queries get the same treatment
-    // via the per-query warmup above).
-    if (doWarm)
-      try SparkEntry.queries(canaryName)(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    val canaryStart = canaryRun()
-    // MULTI-PASS sweep (round 18; see mergePasses): under recurring
-    // host stall windows, P full passes + per-query min-of-medians is
-    // the estimator that lands a clean committed baseline. Default 1 —
-    // identical to the historical single-pass run; the close-protocol
-    // refresh sets SPARK_GRAFT_BENCH_PASSES=3.
-    val passCount = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
-      .map(_.trim.toInt.max(1)).getOrElse(1)
-    val headPasses = scala.collection.mutable.ArrayBuffer
-      .empty[Seq[(String, Double, Option[(Double, Double)])]]
-    val extraPasses = scala.collection.mutable.ArrayBuffer
-      .empty[Seq[(String, Double, Option[(Double, Double)])]]
-    var canaryMid = -1.0
-    (1 to passCount).foreach { p =>
-      headPasses += selected.map(timeOne)
-      if (p == 1) { loadSamples("mid") = loadAvgNow(); canaryMid = canaryRun() }
-      extraPasses += nonHeadline.map(timeOne)
-      if (passCount > 1) {
-        loadSamples(s"pass$p") = loadAvgNow()
-        System.err.println(s"[bench] pass $p/$passCount complete " +
-          s"(load ${loadAvgNow().mkString(",")})")
-      }
-    }
-    val mergedHead = mergePasses(headPasses.toSeq)
-    val mergedExtra = mergePasses(extraPasses.toSeq)
-    (mergedHead ++ mergedExtra).foreach { case (n, _, b) =>
-      b.foreach(bandsOut(n) = _)
-    }
-    val results = mergedHead.map { case (n, t, _) => n -> t }
-    val extraResults = mergedExtra.map { case (n, t, _) => n -> t }
-    loadSamples("end") = loadAvgNow()
-    val canaryEnd = canaryRun()
-    val failed = (results ++ extraResults).count(_._2 < 0)
-    val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val totalAll = total +
-      extraResults.collect { case (_, v) if v >= 0 => v }.sum
-    // Driver contract (round-9 fix): the round artifact is a TAIL
-    // capture of stdout, which truncated the former single giant JSON
-    // line head-first and left `parsed: null`. So: (1) the FULL
-    // per-query map goes to a file; (2) each query also prints as its
-    // own short line (tail-safe, grep-able); (3) the FINAL stdout line
-    // is a compact always-parseable summary with no per-query map.
-    val qs = (results ++ extraResults)
-      .map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    // Round-11 verdict №4: the non-headline list carries a per-query
-    // REASON for why it is outside the headline total. Most are the
-    // same reason — the headline set froze in round 10 so its total
-    // stays comparable round-over-round, and later additions are timed
-    // identically but accumulate in value_all instead — with explicit
-    // overrides where the exclusion is structural, not chronological.
-    val nhReasonOverrides: Map[String, String] = Map(
-      "q_script_median" -> ("SQL-scripting control flow: ~26 sequential"
-        + " COUNT probes pay per-statement job latency by design"),
-      "q_ann_recall" -> "evaluation companion of headlined q_ann_ivf",
-      "q_mv_rewrite" -> ("plan-rewrite demonstration; its data path is"
-        + " the headlined monthly aggregate read from the view"),
-      "q_mv_rewrite_filtered" -> ("plan-rewrite demonstration: the"
-        + " filter-over-view containment case, view scan + pushed filter"),
-      "q_mv_rewrite_join" -> ("plan-rewrite demonstration: the"
-        + " join-over-view containment case, dim joins over the view scan"),
-      "q_approx_distinct_users" -> ("5-row HLL aggregate; headline"
-        + " covers HLL via q_heavy_hitters-family scans"),
-      "q_param_sql" -> "SQL-surface variant of a headlined query shape",
-      "q_pipe_sql" -> "SQL-surface variant of a headlined query shape",
-      "q_avro_evolution" -> "codec variant of headlined q_avro_roundtrip",
-      "q_csv_roundtrip" -> "format variant of headlined q_orc_roundtrip",
-      "q_json_roundtrip" -> "format variant of headlined q_orc_roundtrip",
-      "q_xml_roundtrip" -> "format variant of headlined q_orc_roundtrip")
-    val nhDefault = "added after the round-10 headline freeze (total " +
-      "stays round-over-round comparable); timed identically, in value_all"
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val nh = nonHeadline.map { n =>
-      s"""{"name":"$n","reason":"${esc(nhReasonOverrides.getOrElse(n, nhDefault))}"}"""
-    }.mkString("[", ",", "]")
-    val posJson = positions
-      .map { case (k, i) => "\"" + k + s"\":$i" }.mkString("{", ",", "}")
-    val bandsJson = bandsOut
-      .map { case (k, (lo, hi)) => "\"" + k + f"\":[$lo%.3f,$hi%.3f]" }
-      .mkString("{", ",", "}")
-    val canaryJson =
-      f"""{"query":"$canaryName","start":$canaryStart%.3f,"mid":$canaryMid%.3f,"end":$canaryEnd%.3f}"""
+    val headTimed = selected.map(timeOne)
+    val loadMid = loadAvgNow()
+    val extraTimed = nonHeadline.map(timeOne)
+    val loadEnd = loadAvgNow()
+    val timed = headTimed ++ extraTimed
+    val fresh = timed.collect { case (n, Some(e)) => n -> e }.toMap
+    val queries = timed.map { case (n, e) => n -> e.fold(-1.0)(_.median) }
+    val value = headTimed.flatMap(_._2).map(_.median).sum
     // local[N] → defaultParallelism = N: the actual core count this
-    // run measured under, stamped into the artifact and checked against
-    // the committed map's stamp before any overwrite.
+    // run measured under, checked against the committed map's stamp.
     val runCpus = spark.sparkContext.defaultParallelism
-    val committedCpus =
-      try parseCpusField(java.nio.file.Files.readString(
-        java.nio.file.Paths.get(committedBenchPath)))
-      catch { case _: Throwable => None }
+    val force = sys.env.contains("SPARK_GRAFT_BENCH_FORCE")
+
     val (outPath, guardMsg) = resolveBenchOut(
       requested = sys.env.get("SPARK_GRAFT_BENCH_OUT"),
-      onlySet = only.isDefined,
-      force = sys.env.contains("SPARK_GRAFT_BENCH_FORCE"),
-      newCount = results.size + extraResults.size,
-      existingCount = benchMapSize(committedBenchPath),
-      runCpus = runCpus, committedCpus = committedCpus)
+      onlySet = only.isDefined, force = force,
+      newCount = timed.size,
+      existingCount = committed.fold(0)(_.queries.size),
+      runCpus = runCpus, committedCpus = committed.flatMap(_.cpus))
     guardMsg.foreach(m => System.err.println(s"[bench] $m"))
-    // This run's entries, built directly from the measured medians +
-    // bands (identical to what parseBenchEntries would read back from
-    // the artifact — the r16 code round-tripped through the JSON; the
-    // compare is over the same values either way, this is just earlier,
-    // so the contamination verdict can be WRITTEN INTO the artifact).
-    val newEntries: Map[String, BenchEntry] =
-      (results ++ extraResults).collect {
-        case (k, v) if v >= 0 =>
-          val (lo, hi) = bandsOut.getOrElse(k, (v, v))
-          k -> BenchEntry(v, lo, hi)
-      }.toMap
+
     // BAND COMPARE against the committed baseline BEFORE it is
-    // overwritten: only disjoint-band moves print — by construction the
-    // round-close diff carries zero unattributed noise movers (r14
-    // verdict №2; the old protocol burned an isolated-REPS cycle per
-    // sub-second swing). Committed-green queries that FAILED this run
-    // print unconditionally (the sentinel class the band parse drops).
-    // A map measured at a DIFFERENT scale factor is not comparable —
-    // every shared query would print as a spurious mover — so the
-    // compare refuses loudly instead.
-    var regressedMovers = 0
-    var comparedCount = 0
-    var oldEntriesOpt: Option[Map[String, BenchEntry]] = None
-    try {
-      val committedJson = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(committedBenchPath))
-      failedMovers(committedTimes, results ++ extraResults).foreach(q =>
+    // overwritten: only disjoint-band moves print, plus committed-green
+    // queries that FAILED this run. A map measured at a different scale
+    // factor or core count is not comparable — every shared query would
+    // print as a spurious mover — so the compare refuses loudly instead.
+    // Its regressions, with the band widths, give the LOAD-CONTAMINATION
+    // verdict, written into the artifact and the summary line.
+    val contamination: Option[String] = committed.flatMap { old =>
+      failedMovers(committedTimes, queries).foreach(q =>
         System.err.println(s"[bench] MOVER $q FAILED this run " +
           f"(committed ${committedTimes(q)}%.3f s)"))
-      val committedSf = parseSfField(committedJson)
-      if (committedSf.exists(_ != sfDir))
+      if (old.sf.exists(_ != sfDir)) {
         System.err.println(s"[bench] band compare SKIPPED: committed map " +
-          s"was measured at ${committedSf.get}, this run at $sfDir — " +
+          s"was measured at ${old.sf.get}, this run at $sfDir — " +
           "cross-SF ratios are not movers")
-      else if (committedCpus.exists(_ != runCpus))
+        None
+      } else if (old.cpus.exists(_ != runCpus)) {
         System.err.println(s"[bench] band compare SKIPPED: committed map " +
-          s"was measured at ${committedCpus.get} cores, this run at " +
+          s"was measured at ${old.cpus.get} cores, this run at " +
           s"$runCpus — cross-core-count ratios are not movers")
-      else {
-        val oldEntries = parseBenchEntries(committedJson)
-        oldEntriesOpt = Some(oldEntries)
-        comparedCount = (oldEntries.keySet & newEntries.keySet).size
-        val movers = moversOutsideBand(oldEntries, newEntries)
-        regressedMovers = movers.count(_._2.startsWith("regressed"))
+        None
+      } else {
+        val oldEntries = old.entries
+        val movers = moversOutsideBand(oldEntries, fresh)
         if (movers.isEmpty)
           System.err.println("[bench] band compare vs committed map: no"
             + " movers outside noise bands")
         else movers.foreach { case (q, why) =>
           System.err.println(s"[bench] MOVER $q $why") }
+        loadContamination(oldEntries, fresh).orElse(massRegression(
+          movers.count(_._2.startsWith("regressed")),
+          (oldEntries.keySet & fresh.keySet).size))
       }
-    } catch { case _: Throwable => () }
-    // LOAD-CONTAMINATION verdict (round-16 lesson; see
-    // loadContamination): computed for EVERY comparable run — the r16
-    // driver artifact only revealed its gating via the /tmp path in
-    // `queries_file`, so the verdict (and its reason) is now an explicit
-    // field in the artifact and the final stdout line (r16 verdict №3).
+    }
     // The WRITE is diverted only when the run would actually land on
     // the committed path; FORCE overrides for a deliberate re-baseline.
-    val contamination: Option[String] =
-      oldEntriesOpt.flatMap(old =>
-        (try loadContamination(old, newEntries)
-        catch { case _: Throwable => None })
-          .orElse(massRegression(regressedMovers, comparedCount)))
     val finalOut = contamination match {
-      case Some(why) if sameCanonicalPath(outPath, committedBenchPath) &&
-          !sys.env.contains("SPARK_GRAFT_BENCH_FORCE") =>
+      case Some(why) if sameCanonicalPath(outPath, committedBenchPath) && !force =>
         System.err.println(s"[bench] REFUSING to overwrite " +
           s"$committedBenchPath: $why; writing " +
           "/tmp/bench_queries_contaminated.json instead " +
@@ -1080,24 +630,37 @@ object Bench {
         "/tmp/bench_queries_contaminated.json"
       case _ => outPath
     }
-    val loadJson = loadAvgJson(loadSamples.toSeq)
-    val quietStart = loadQuietStart(loadSamples("start"),
-      Runtime.getRuntime.availableProcessors() / 8.0)
-    val contaminatedJson = contamination match {
-      case Some(why) => s""""contaminated":true,"contamination_reason":"${esc(why)}""""
-      case None => """"contaminated":false"""
-    }
-    val fullJson =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$runCpus,"queries":$qs,"bands":$bandsJson,"positions":$posJson,"canary":$canaryJson,"non_headline":$nh,"value_all":$totalAll%.3f,"failed":$failed,"reps":$reps,"reps_noise_class":${adaptiveReps(Some(0.5), repsExplicit, reps)},"passes":$passCount,"loadavg":$loadJson,"load_quiet_start":$quietStart,$contaminatedJson,"sf":"$sfDir"}"""
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(finalOut), fullJson)
+
+    val map = BenchMap(
+      value = value,
+      valueAll = fresh.values.map(_.median).sum,
+      failed = timed.count(_._2.isEmpty),
+      cpus = Some(runCpus), sf = Some(sfDir),
+      queries = queries,
+      bands = fresh.map { case (n, e) => n -> (e.lo, e.hi) },
+      nonHeadline = nonHeadline.map(n => n -> nonHeadlineReasons(n)),
+      loadavg = Seq("start" -> loadStart, "mid" -> loadMid, "end" -> loadEnd),
+      loadQuietStart = loadQuietStart(loadStart,
+        Runtime.getRuntime.availableProcessors() / 8.0),
+      contamination = contamination)
+    val full = map.toJson
+    try java.nio.file.Files.writeString(java.nio.file.Paths.get(finalOut),
+      JsonMethods.compact(full))
     catch { case e: Throwable =>
       System.err.println(s"[bench] could not write $finalOut: ${e.getMessage}")
     }
-    (results ++ extraResults).foreach { case (k, v) =>
-      println(f"""{"query":"$k","sec":$v%.3f}""") }
-    println(s"""{"canary":$canaryJson}""")
-    println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$runCpus,"n":${results.size},"value_all":$totalAll%.3f,"n_all":${results.size + extraResults.size},"failed":$failed,"reps":$reps,"passes":$passCount,"canary_start":$canaryStart%.3f,"canary_end":$canaryEnd%.3f,"loadavg":$loadJson,"load_quiet_start":$quietStart,$contaminatedJson,"sf":"$sfDir","queries_file":"$finalOut"}""")
+    // The round artifact is a TAIL capture of stdout, so the full map goes
+    // to the file above, each query prints as its own short line, and the
+    // FINAL line is a compact summary without the per-query fields.
+    map.queries.foreach { case (k, v) =>
+      println(JsonMethods.compact(JObject("query" -> JString(k), "sec" -> sec(v))))
+    }
+    val perQuery = Set("queries", "bands", "non_headline")
+    println(JsonMethods.compact(JObject(
+      full.obj.filterNot(f => perQuery(f._1)) ++ List(
+        "n" -> JInt(headTimed.size),
+        "n_all" -> JInt(timed.size),
+        "queries_file" -> JString(finalOut)))))
     spark.stop()
   }
 }

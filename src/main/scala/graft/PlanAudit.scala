@@ -5,20 +5,6 @@ package graft
   * spotted between rounds). Not part of the driver contract.
   */
 object PlanAudit {
-  /** Env-gated loop-body plan dump (`SPARK_GRAFT_EXPLAIN_LOOPS=1`):
-    * prints the per-round DataFrame's formatted plan BEFORE
-    * localCheckpoint consumes it. A checkpointed loop's final `explain`
-    * shows only the post-checkpoint RDD scan, so the per-round join
-    * strategy (the r18 broadcast-pin wins) was unverifiable from the
-    * committed dumps (r18 verdict №5). No-op in Verify/Bench (env
-    * unset). */
-  private[graft] def loopBody(label: String,
-      df: org.apache.spark.sql.DataFrame): Unit =
-    if (sys.env.contains("SPARK_GRAFT_EXPLAIN_LOOPS")) {
-      println(s"----- loop body: $label -----")
-      df.explain("formatted")
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val spark = GraftSession.create("plan-audit")

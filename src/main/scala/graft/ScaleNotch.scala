@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** SELF-GENERATED 10× SCALE NOTCH (r16 verdict №1/№7): the driver's
   * largest corpus is sf0.1 (100k events / 5k docs / 2k embeddings), so
@@ -272,7 +274,9 @@ object ScaleNotch {
       // copy count and fail the exactly-once requires with a misleading
       // "routed twice"; no generator ever emits a negative id.
       java.nio.file.Files.writeString(srcDir.resolve("tick.json"),
-        """{"event_id":-1,"event_type":"Laptop","value":1.0,"ts":1704067200000000000}""")
+        JsonMethods.compact(JObject("event_id" -> JInt(-1),
+          "event_type" -> JString("Laptop"), "value" -> JDouble(1.0),
+          "ts" -> JLong(1704067200000000000L))))
       // RESTART-RECOVERY TIME (r17 verdict №5): the operational number
       // a 100 TB deployment sizes failover from — wall from the restart
       // call to (a) the first completed post-recovery micro-batch (the
@@ -325,7 +329,6 @@ object ScaleNotch {
         "retryables" -> nRetryable.toDouble,
         "ingest_s" -> (math.round(ingestS * 10) / 10.0),
         "total_s" -> (math.round(totalS * 10) / 10.0),
-        "consume_events_per_s" -> math.round(nEvents / ingestS).toDouble,
         "restart_first_batch_s" ->
           (math.round(firstBatchS * 10) / 10.0),
         "restart_drain_s" -> (math.round(drainS * 10) / 10.0),
@@ -368,67 +371,55 @@ object ScaleNotch {
 
   private[graft] val notchPath = "/root/repo/SCALE_NOTCH.json"
 
-  /** Merge one run into the committed SCALE_NOTCH.json (r17 verdict
-    * №4: batch-only probe runs used to PRINT their exponents and write
-    * nothing, so only the full-notch families had committed evidence).
+  /** Merge one run into the committed SCALE_NOTCH.json, so batch-only
+    * probe runs are committed evidence too, not print-and-forget.
     * Canonical artifact shape:
     *
     *   {"metric":"scale_notch","full":<full-run object|null>,
     *    "probes":[<probe run>, ...]}
     *
     * A full run replaces `full` and preserves the probe history; a
-    * batch-only run appends to `probes` and preserves `full`. The
-    * pre-r18 artifact was the bare full-run object — detected by the
-    * absent "probes" key and migrated to `full` untouched. Pure
-    * (text in → text out) so BenchGuardSpec pins every branch; the
-    * splice only ever parses text this same writer produced. */
-  private[graft] def mergeNotch(existing: Option[String],
-      newFull: Option[String], newProbe: Option[String]): String = {
-    val marker = "\"probes\":["
-    val (oldFull, oldInner) =
-      existing.map(_.trim).filter(_.nonEmpty) match {
-        case None => (None, "")
-        case Some(t) =>
-          val p = t.indexOf(marker)
-          if (p < 0) (Some(t), "") // legacy bare full-run object
-          else {
-            val fm = "\"full\":"
-            val f = t.indexOf(fm)
-            val fullStr =
-              if (f < 0) None
-              else Some(t.substring(f + fm.length,
-                t.lastIndexOf("," + marker)).trim).filter(_ != "null")
-            (fullStr, t.substring(p + marker.length,
-              t.lastIndexOf("]")).trim)
-          }
+    * batch-only run appends to `probes` and preserves `full`. The older
+    * artifact was the bare full-run object — detected by the absent
+    * "probes" key and migrated to `full` untouched. Pure so
+    * BenchGuardSpec pins every branch. */
+  private[graft] def mergeNotch(existing: Option[JValue],
+      newFull: Option[JValue], newProbe: Option[JValue]): JValue = {
+    val (oldFull, oldProbes) = existing match {
+      case None => (JNull, Nil)
+      case Some(t) => t \ "probes" match {
+        case JArray(ps) => (t \ "full" match { case JNothing => JNull; case f => f }, ps)
+        case _ => (t, Nil) // legacy bare full-run object
       }
-    val full = newFull.orElse(oldFull).getOrElse("null")
-    val inner = (Seq(oldInner).filter(_.nonEmpty) ++ newProbe)
-      .mkString(",")
-    s"""{"metric":"scale_notch","full":$full,"probes":[$inner]}"""
+    }
+    JObject("metric" -> JString("scale_notch"),
+      "full" -> newFull.getOrElse(oldFull),
+      "probes" -> JArray(oldProbes ++ newProbe))
   }
 
-  private def writeNotch(newFull: Option[String],
-      newProbe: Option[String]): Unit =
+  private def writeNotch(newFull: Option[JValue],
+      newProbe: Option[JValue]): Unit =
     try {
       val p = java.nio.file.Paths.get(notchPath)
       val existing =
         if (java.nio.file.Files.exists(p))
-          Some(java.nio.file.Files.readString(p))
+          Some(java.nio.file.Files.readString(p).trim).filter(_.nonEmpty)
+            .map(JsonMethods.parse(_))
         else None
       java.nio.file.Files.writeString(p,
-        mergeNotch(existing, newFull, newProbe))
+        JsonMethods.compact(mergeNotch(existing, newFull, newProbe)))
     } catch { case e: Throwable =>
       System.err.println(s"[notch] could not write $notchPath: " +
         e.getMessage)
     }
 
-  private def fmt(m: Map[String, Double]): String =
-    m.toSeq.sortBy(_._1).map { case (k, v) =>
-      val s = if (v == math.rint(v) && math.abs(v) < 1e15)
-        v.toLong.toString else v.toString
-      s""""$k":$s"""
-    }.mkString("{", ",", "}")
+  /** A metric map as a JSON object, keys sorted, whole values as
+    * integers. */
+  private def metrics(m: Map[String, Double]): JObject =
+    JObject(m.toSeq.sortBy(_._1).map { case (k, v) =>
+      k -> (if (v == math.rint(v) && math.abs(v) < 1e15) JLong(v.toLong)
+        else JDouble(v))
+    }.toList)
 
   def main(args: Array[String]): Unit = {
     val baseSf = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -476,29 +467,29 @@ object ScaleNotch {
       chain.foreach { q =>
         val m = timeQuery(spark, shuffles, q, dir)
         batch(q) = batch.getOrElse(q, Map.empty) + (tag -> m)
-        System.err.println(s"[notch] $q@$tag ${fmt(m)}")
+        System.err.println(s"[notch] $q@$tag ${JsonMethods.compact(metrics(m))}")
       }
     }
+
+    def ratio(a: Double, b: Double): Double =
+      if (a > 0) math.round(b / a * 100) / 100.0 else -1.0
+    val batchJson = JObject(batch.toList.map { case (q, scales) =>
+      q -> JObject("x1" -> metrics(scales("x1")),
+        s"x$copies" -> metrics(scales(s"x$copies")),
+        "wall_ratio" -> JDouble(ratio(scales("x1")("wall_s"),
+          scales(s"x$copies")("wall_s"))))
+    })
 
     // SPARK_GRAFT_NOTCH_BATCH_ONLY=1 skips the topology legs — the
     // fast path for probing batch-chain scaling exponents at more
     // copy counts than the full notch protocol needs.
     if (sys.env.contains("SPARK_GRAFT_NOTCH_BATCH_ONLY")) {
-      val batchJsonOnly = batch.map { case (q, scales) =>
-        val r = if (scales("x1")("wall_s") > 0)
-          math.round(scales(s"x$copies")("wall_s") /
-            scales("x1")("wall_s") * 100) / 100.0 else -1.0
-        s""""$q":{"x1":${fmt(scales("x1"))},"x$copies":${
-          fmt(scales(s"x$copies"))},"wall_ratio":$r}"""
-      }.mkString("{", ",", "}")
-      val probeJson = s"""{"base_sf":"$baseSf","copies":$copies,""" +
-        s""""chain":[${chain.map("\"" + _ + "\"").mkString(",")}],""" +
-        s""""batch":$batchJsonOnly}"""
-      // Probe runs are committed evidence too (r17 verdict №4): append
-      // to the artifact's probe history instead of print-and-forget.
-      writeNotch(None, Some(probeJson))
-      println(s"""{"metric":"scale_notch_batch","base_sf":"$baseSf",""" +
-        s""""copies":$copies,"batch":$batchJsonOnly}""")
+      writeNotch(None, Some(JObject("base_sf" -> JString(baseSf),
+        "copies" -> JInt(copies), "chain" -> JArray(chain.map(JString(_)).toList),
+        "batch" -> batchJson)))
+      println(JsonMethods.compact(JObject(
+        "metric" -> JString("scale_notch_batch"), "base_sf" -> JString(baseSf),
+        "copies" -> JInt(copies), "batch" -> batchJson)))
       spark.stop()
       return
     }
@@ -506,32 +497,27 @@ object ScaleNotch {
     // Topology at 1× then at copies× — ingest budget scaled from the
     // measured 1× ingest (floor 90 s; ×2.5 headroom at 10×).
     val topo1 = runTopology(spark, baseSf, "x1", ingestBudgetMs = 150000L)
-    System.err.println(s"[notch] topology x1 ${fmt(topo1)}")
+    System.err.println(s"[notch] topology x1 ${JsonMethods.compact(metrics(topo1))}")
     val budget10 = math.max(300000L,
       (topo1("ingest_s") * copies * 2.5 * 1000).toLong)
     val topoN = runTopology(spark, synthDir, s"x$copies", budget10)
-    System.err.println(s"[notch] topology x$copies ${fmt(topoN)}")
+    System.err.println(
+      s"[notch] topology x$copies ${JsonMethods.compact(metrics(topoN))}")
 
-    def ratio(a: Double, b: Double): Double =
-      if (a > 0) math.round(b / a * 100) / 100.0 else -1.0
-    val topoJson =
-      s"""{"x1":${fmt(topo1)},"x$copies":${fmt(topoN)},""" +
-        s""""wall_ratio":${ratio(topo1("total_s"), topoN("total_s"))},""" +
-        s""""ingest_ratio":${ratio(topo1("ingest_s"), topoN("ingest_s"))},""" +
-        s""""state_rows_ratio":${
-          ratio(topo1("max_state_rows"), topoN("max_state_rows"))}}"""
-    val batchJson = batch.map { case (q, scales) =>
-      val r = ratio(scales("x1")("wall_s"), scales(s"x$copies")("wall_s"))
-      s""""$q":{"x1":${fmt(scales("x1"))},"x$copies":${
-        fmt(scales(s"x$copies"))},"wall_ratio":$r}"""
-    }.mkString("{", ",", "}")
-    val json =
-      s"""{"metric":"scale_notch","base_sf":"$baseSf","copies":$copies,""" +
-        s""""synth":{"events":$nEv,"documents":$nDoc,"embeddings":$nEmb,""" +
-        f""""wall_s":$synthS%.1f},"topology":$topoJson,""" +
-        s""""batch":$batchJson}"""
+    val json = JObject(
+      "metric" -> JString("scale_notch"), "base_sf" -> JString(baseSf),
+      "copies" -> JInt(copies),
+      "synth" -> JObject("events" -> JLong(nEv), "documents" -> JLong(nDoc),
+        "embeddings" -> JLong(nEmb),
+        "wall_s" -> JDouble(math.round(synthS * 10) / 10.0)),
+      "topology" -> JObject("x1" -> metrics(topo1), s"x$copies" -> metrics(topoN),
+        "wall_ratio" -> JDouble(ratio(topo1("total_s"), topoN("total_s"))),
+        "ingest_ratio" -> JDouble(ratio(topo1("ingest_s"), topoN("ingest_s"))),
+        "state_rows_ratio" ->
+          JDouble(ratio(topo1("max_state_rows"), topoN("max_state_rows")))),
+      "batch" -> batchJson)
     writeNotch(Some(json), None)
-    println(json)
+    println(JsonMethods.compact(json))
     spark.stop()
   }
 }

@@ -332,9 +332,7 @@ object GraphOps {
         .select(col("dst").as("node")).distinct()
         .join(if (pinReached) broadcast(seen) else seen, Seq("node"), "left_anti")
         .withColumn("hops", lit(t))
-      val merged = reached.unionAll(next)
-      graft.PlanAudit.loopBody("bfsHops hop", merged)
-      reached = merged.localCheckpoint()
+      reached = reached.unionAll(next).localCheckpoint()
     }
     reached
   }
@@ -505,7 +503,6 @@ object GraphOps {
         .select(col("node"), expr("31 - p % 32").as("newlbl"))
       val next = lbl.as("o").join(broadcast(best.as("b")), Seq("node"), "left")
         .select(col("node"), coalesce(col("newlbl"), col("lbl")).as("lbl"))
-      graft.PlanAudit.loopBody("labelPropagation round", next)
       lbl = next.localCheckpoint()
     }
     val sizes = lbl.groupBy("lbl").agg(count(lit(1)).as("community_size"))
@@ -551,7 +548,6 @@ object GraphOps {
       val next = adj.join(broadcast(ball), col("dst") === col("node"))
         .groupBy("src").agg(expr("hll_union_agg(sk)").as("sk"))
         .select(col("src").as("node"), col("sk"))
-      graft.PlanAudit.loopBody("hyperBall round", next)
       ball = next.localCheckpoint() // |V| sketch rows per round
     }
     var pairs = nodes.select(col("node").as("v"), col("node").as("u"))

@@ -1059,7 +1059,6 @@ object Profiling {
   def scriptMedianSearch(spark: SparkSession, dir: String): DataFrame = {
     spark.read.parquet(PriceHist.path(spark, dir))
       .createOrReplaceTempView("graft_script_pc")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     spark.sql(
       """BEGIN
         |  DECLARE lo BIGINT = 0;

@@ -452,7 +452,6 @@ object Ranking {
         .select(col("node"),
           (expr("85 * coalesce(inm, 0L) div 100") +
             expr(s"(15 * $MassTotal div 100) div nn")).as("mass"))
-      graft.PlanAudit.loopBody("textRank round", next)
       mass = next.localCheckpoint()
     }
     mass.orderBy(col("mass").desc, col("node"))
@@ -548,10 +547,7 @@ object Ranking {
       // Checkpoint every 4th round, not every round: the vector is
       // ≤ 5·7 rows, so 4 rounds of chained lineage plan fine, and each
       // skipped checkpoint is one whole Spark job saved (12 → 3).
-      if (r % 4 == 0) {
-        graft.PlanAudit.loopBody("markovChain round", mass)
-        mass = mass.localCheckpoint()
-      }
+      if (r % 4 == 0) mass = mass.localCheckpoint()
     }
     val fin = mass.filter(col("state") === "CONV")
       .select(col("mscn"), col("mass"))

@@ -80,11 +80,11 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("parseCpusField reads the stamp; absent on legacy maps") {
-    assert(Bench.parseCpusField(
+    assert(Bench.BenchMap.parse(
       """{"metric":"total","value":1.0,"unit":"sec","cpus":32,"queries":{}}""")
-      .contains(32))
-    assert(Bench.parseCpusField(
-      """{"metric":"total","value":1.0,"unit":"sec","queries":{}}""").isEmpty)
+      .cpus.contains(32))
+    assert(Bench.BenchMap.parse(
+      """{"metric":"total","value":1.0,"unit":"sec","queries":{}}""").cpus.isEmpty)
   }
 
   test("full run, equal-or-larger map, lands on the committed path") {
@@ -100,27 +100,19 @@ class BenchGuardSpec extends AnyFunSuite {
     val tmp = java.nio.file.Files.createTempFile("graft-bench", ".json")
     java.nio.file.Files.writeString(tmp,
       """{"metric":"total","value":1.0,"queries":{"q_a":0.123,"q_b":1.500,"q_c":0.001},"reps":2}""")
-    assert(Bench.benchMapSize(tmp.toString) == 3)
+    assert(Bench.BenchMap.read(tmp.toString).map(_.queries.size).contains(3))
     java.nio.file.Files.writeString(tmp, """{"queries":{}}""")
-    assert(Bench.benchMapSize(tmp.toString) == 0)
-    assert(Bench.benchMapSize("/nonexistent/nowhere.json") == 0)
+    assert(Bench.BenchMap.read(tmp.toString).map(_.queries.size).contains(0))
+    assert(Bench.BenchMap.read("/nonexistent/nowhere.json").isEmpty)
     java.nio.file.Files.delete(tmp)
   }
 
-  test("adaptive reps: sub-second and new queries get median-of-5; " +
-      "second-plus keep the default; explicit REPS wins everywhere") {
-    // r14 verdict №2: the noise class is committed-time <1 s.
-    assert(Bench.adaptiveReps(Some(0.4), None) == 5)
-    assert(Bench.adaptiveReps(None, None) == 5) // new query: no baseline
-    assert(Bench.adaptiveReps(Some(1.9), None) == 2)
-    assert(Bench.adaptiveReps(Some(-1.0), None) == 2) // failed last round
-    // explicit SPARK_GRAFT_BENCH_REPS overrides both directions (the §6
-    // isolated-REPS protocol sets 7 on second-plus queries too)
-    assert(Bench.adaptiveReps(Some(0.4), Some(7)) == 7)
-    assert(Bench.adaptiveReps(Some(2.5), Some(7)) == 7)
-    assert(Bench.adaptiveReps(Some(0.4), Some(1)) == 1)
-    // a default raised above 5 is never lowered for the noise class
-    assert(Bench.adaptiveReps(Some(0.4), None, default = 6) == 6)
+  test("adaptive reps: sub-second and new queries get median-of-5, the rest 2") {
+    // The noise class is committed-time <1 s.
+    assert(Bench.adaptiveReps(Some(0.4)) == 5)
+    assert(Bench.adaptiveReps(None) == 5) // new query: no baseline
+    assert(Bench.adaptiveReps(Some(1.9)) == 2)
+    assert(Bench.adaptiveReps(Some(-1.0)) == 2) // failed last round
   }
 
   private val mapWithBands =
@@ -128,13 +120,13 @@ class BenchGuardSpec extends AnyFunSuite {
 
   test("parseBenchEntries reads medians plus noise bands; failed " +
       "queries and band-less maps degrade safely") {
-    val e = Bench.parseBenchEntries(mapWithBands)
+    val e = Bench.BenchMap.parse(mapWithBands).entries
     assert(e("q_a") == Bench.BenchEntry(0.4, 0.35, 0.52))
     assert(e("q_b") == Bench.BenchEntry(2.0, 1.9, 2.11))
     assert(!e.contains("q_c")) // -1 sentinel is not a timing
-    // pre-band maps (r14 and earlier): zero-width band at the median
-    val old = Bench.parseBenchEntries(
-      """{"queries":{"q_a":0.400,"q_b":2.000},"positions":{"q_a":0}}""")
+    // maps without a bands field: zero-width band at the median
+    val old = Bench.BenchMap.parse(
+      """{"queries":{"q_a":0.400,"q_b":2.000},"positions":{"q_a":0}}""").entries
     assert(old("q_a") == Bench.BenchEntry(0.4, 0.4, 0.4))
   }
 
@@ -161,9 +153,9 @@ class BenchGuardSpec extends AnyFunSuite {
 
   test("failed queries that were committed-green are always movers; " +
       "cross-SF compares are detectable from the sf field") {
-    // The band parse drops -1 sentinels, so a green→FAILED regression
-    // would silently leave the compared keyset — failedMovers is the
-    // net for exactly that class.
+    // A -1 sentinel has no entry, so a green→FAILED regression would
+    // silently leave the compared keyset — failedMovers is the net for
+    // exactly that class.
     val committed = Map("q_a" -> 0.4, "q_b" -> 2.0, "q_dead" -> -1.0)
     val ran = Seq("q_a" -> -1.0, "q_b" -> 2.1, "q_dead" -> -1.0,
       "q_new" -> -1.0)
@@ -171,34 +163,59 @@ class BenchGuardSpec extends AnyFunSuite {
     // q_new has no baseline: not movers.
     assert(Bench.failedMovers(committed, ran) == Seq("q_a"))
     // sf field round-trips so the compare can refuse cross-SF ratios
-    assert(Bench.parseSfField(mapWithBands).isEmpty)
-    assert(Bench.parseSfField(
-      """{"queries":{"q_a":1.0},"failed":0,"reps":2,"sf":"/root/testdata/sf0.1"}""")
-      .contains("/root/testdata/sf0.1"))
+    assert(Bench.BenchMap.parse(mapWithBands).sf.isEmpty)
+    assert(Bench.BenchMap.parse(
+      """{"queries":{"q_a":1.0},"failed":0,"reps":2,"sf":"/data/sf0.1"}""")
+      .sf.contains("/data/sf0.1"))
   }
 
   test("benchMapSize still counts the flat queries map when bands follow") {
     val tmp = java.nio.file.Files.createTempFile("graft-bench-band", ".json")
     java.nio.file.Files.writeString(tmp, mapWithBands)
-    assert(Bench.benchMapSize(tmp.toString) == 3)
-    assert(Bench.parseBenchTimes(tmp.toString) ==
-      Map("q_a" -> 0.4, "q_b" -> 2.0, "q_c" -> -1.0))
+    assert(Bench.BenchMap.read(tmp.toString).map(_.queries) ==
+      Some(Seq("q_a" -> 0.4, "q_b" -> 2.0, "q_c" -> -1.0)))
     java.nio.file.Files.delete(tmp)
   }
 
   test("the committed baseline at HEAD is the full registry, not a subset") {
-    // The r11/r12 incidents are detectable from the artifact alone: a
-    // committed map smaller than the registry means a subset run
-    // leaked through. Guard the repo state itself, not just the code.
-    // Lower bound = the round-13 full-registry count: the registry only
-    // grows, so any committed map below it means a subset run leaked
-    // through (mid-round the map may lag new registrations until the
-    // round-close full run, hence >= not ==).
-    val onDisk = Bench.benchMapSize(committed)
+    // The subset-overwrite incidents are detectable from the artifact
+    // alone: a committed map smaller than the registry means a subset
+    // run leaked through. Guard the repo state itself, not just the code.
+    // The registry only grows, and mid-round the map may lag new
+    // registrations until a full run, hence a lower bound, not ==.
+    val onDisk = Bench.BenchMap.read(committed).fold(0)(_.queries.size)
     assert(onDisk >= 361 && onDisk <= SparkEntry.queries.size,
       s"committed bench_queries.json has $onDisk entries (registry: " +
         s"${SparkEntry.queries.size}) — a subset run overwrote the " +
         "baseline")
+  }
+
+  test("the committed bench_queries.json reads back with its recorded values") {
+    val m = Bench.BenchMap.read(committed).get
+    assert(m.queries.size == 371 && m.bands.size == 371)
+    assert(m.cpus.contains(32) && m.sf.exists(_.endsWith("testdata/sf0.1")))
+    val head = m.queries.filter { case (n, _) => Bench.headline.contains(n) }
+    assert(head.size == 192)
+    assert(m.value == 116.709)
+    assert(math.abs(head.map(_._2).sum - m.value) < 1e-6,
+      s"headline medians sum to ${head.map(_._2).sum}, value is ${m.value}")
+  }
+
+  test("BenchMap round trip: what the writer writes the reader reads back") {
+    val m = Bench.BenchMap(value = 2.4, valueAll = 3.9, failed = 1,
+      cpus = Some(4), sf = Some("/data/sf0.01"),
+      queries = Seq("q_b" -> 2.0, "q_a" -> 0.4, "q_x" -> 1.5, "q_c" -> -1.0),
+      bands = Map("q_b" -> (1.9, 2.11), "q_a" -> (0.35, 0.52),
+        "q_x" -> (1.5, 1.5)),
+      nonHeadline = Seq("q_x" -> "a \"quoted\" reason", "q_c" -> "why"),
+      loadavg = Seq("start" -> Seq(0.5, 0.6, 0.7), "end" -> Seq.empty),
+      loadQuietStart = true, contamination = Some("bands 4x wider"))
+    val json = org.json4s.jackson.JsonMethods.compact(m.toJson)
+    assert(Bench.BenchMap.parse(json) == m, json)
+    val clean = m.copy(cpus = None, sf = None, contamination = None,
+      loadQuietStart = false)
+    assert(Bench.BenchMap.parse(
+      org.json4s.jackson.JsonMethods.compact(clean.toJson)) == clean)
   }
 
   test("load-contaminated runs are detected by within-run band width, " +
@@ -241,28 +258,12 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.massRegression(0, 0).isEmpty)
   }
 
-  test("concurrent mode can never write the committed serial map") {
-    // A pools run records under-contention latencies; landing them on
-    // the serial baseline would flag every query as a regression on
-    // the next band compare — the overwrite-incident class, concurrent
-    // flavor. Explicit OUT at the committed path is diverted; any
-    // other explicit path is honored; default is the concurrent file.
-    assert(Bench.resolveConcurrentOut(Some(committed))
-      == "/root/repo/bench_concurrent.json")
-    assert(Bench.resolveConcurrentOut(Some("/tmp/x.json")) == "/tmp/x.json")
-    assert(Bench.resolveConcurrentOut(None)
-      == "/root/repo/bench_concurrent.json")
-  }
-
   test("overwrite guards compare CANONICAL paths, not strings " +
       "(r16 advice №5)") {
-    // /root/repo/../repo/bench_queries.json IS the committed map; the
-    // r16 string compare let it through both the concurrent diverter
-    // and (inverted) the shrink guard.
+    // A `..` spelling of the committed path IS the committed map; a
+    // string compare would let it through the shrink guard.
     val alias = "/root/repo/../repo/bench_queries.json"
     assert(Bench.sameCanonicalPath(alias, committed))
-    assert(Bench.resolveConcurrentOut(Some(alias))
-      == "/root/repo/bench_concurrent.json")
     val (path, warn) = Bench.resolveBenchOut(requested = Some(alias),
       onlySet = false, force = false, newCount = 10, existingCount = 370)
     assert(path == "/tmp/bench_queries_refused.json" && warn.isDefined,
@@ -271,31 +272,18 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(!Bench.sameCanonicalPath("/tmp/x.json", committed))
   }
 
-  test("SPARK_GRAFT_BENCH_POOLS parses comma lists; garbage is " +
-      "rejected loudly and falls through to serial (r16 advice №4)") {
-    assert(Bench.parsePoolCounts(None) == Seq.empty)
-    assert(Bench.parsePoolCounts(Some("4")) == Seq(4))
-    assert(Bench.parsePoolCounts(Some("4,8")) == Seq(4, 8))
-    assert(Bench.parsePoolCounts(Some(" 4 , 8 ")) == Seq(4, 8))
-    assert(Bench.parsePoolCounts(Some("1")) == Seq.empty,
-      "one pool IS the serial mode")
-    var warned = ""
-    assert(Bench.parsePoolCounts(Some("four"), m => warned = m) == Seq.empty)
-    assert(warned.contains("SPARK_GRAFT_BENCH_POOLS") &&
-      warned.contains("four"),
-      s"the warning must name the env var and the bad value: $warned")
-  }
-
   test("load telemetry: /proc/loadavg parses here; the artifact field " +
       "renders start/mid/end; quiet-start threshold (r16 verdict №2)") {
+    import org.json4s.jackson.JsonMethods.parse
     // On this (Linux) host the sample must be three non-negative loads.
     val now = Bench.loadAvgNow()
     assert(now.size == 3 && now.forall(_ >= 0))
-    val json = Bench.loadAvgJson(Seq(
-      "start" -> Seq(0.5, 0.6, 0.7), "mid" -> Seq(12.0, 8.0, 4.0),
-      "end" -> Seq.empty))
-    assert(json ==
-      """{"start":[0.50,0.60,0.70],"mid":[12.00,8.00,4.00],"end":[]}""")
+    val m = Bench.BenchMap(0, 0, 0, None, None, Nil, Map.empty, Nil,
+      loadavg = Seq("start" -> Seq(0.5, 0.6, 0.7),
+        "mid" -> Seq(12.0, 8.0, 4.0), "end" -> Seq.empty),
+      loadQuietStart = false, contamination = None)
+    assert((m.toJson \ "loadavg") ==
+      parse("""{"start":[0.50,0.60,0.70],"mid":[12.00,8.00,4.00],"end":[]}"""))
     // Self-certification bit: entering 1-min load under the threshold.
     assert(Bench.loadQuietStart(Seq(0.5, 1.0, 2.0), 4.0))
     assert(!Bench.loadQuietStart(Seq(4.5, 1.0, 2.0), 4.0))
@@ -303,64 +291,29 @@ class BenchGuardSpec extends AnyFunSuite {
       "missing telemetry must NOT read as certified-quiet")
   }
 
-  test("concurrent run objects carry their own loadavg + hotspots " +
-      "(r17 verdict №3/№7: per-run self-certification and mechanism " +
-      "evidence, not session-level only)") {
-    val core = """{"metric":"concurrent_wall","value":1.0,"pools":4}"""
-    val out = Bench.concurrentRunJson(core,
-      """{"start":[0.50],"end":[1.00]}""",
-      """[{"query":"q_x","inflation":21.00}]""")
-    assert(out ==
-      """{"metric":"concurrent_wall","value":1.0,"pools":4,""" +
-        """"loadavg":{"start":[0.50],"end":[1.00]},""" +
-        """"hotspots":[{"query":"q_x","inflation":21.00}]}""")
-  }
-
-  test("multi-pass merge: min-of-pass-medians wins, band comes from " +
-      "the cleanest pass, a green pass beats a failed one (round 18: " +
-      "recurring host stall windows — no single pass lands clean)") {
-    def pass(rows: (String, Double, (Double, Double))*) =
-      rows.map { case (n, t, b) => (n, t, if (t >= 0) Some(b) else None) }
-    // q_a: pass 2 is the clean one (stall hit pass 1); its median and
-    // rep-max carry, lo is the global rep minimum.
-    // q_b: failed in pass 1, green in pass 2 → green.
-    // q_c: failed in every pass → -1 sentinel, no band.
-    val merged = Bench.mergePasses(Seq(
-      pass(("q_a", 3.0, (2.8, 3.4)), ("q_b", -1.0, (0, 0)),
-        ("q_c", -1.0, (0, 0))),
-      pass(("q_a", 1.0, (0.9, 1.1)), ("q_b", 0.5, (0.4, 0.6)),
-        ("q_c", -1.0, (0, 0)))))
-    assert(merged == Seq(
-      ("q_a", 1.0, Some((0.9, 1.1))),
-      ("q_b", 0.5, Some((0.4, 0.6))),
-      ("q_c", -1.0, None)))
-    // Single pass degenerates to identity (the historical artifact).
-    val one = pass(("q_a", 2.0, (1.9, 2.2)))
-    assert(Bench.mergePasses(Seq(one)) == one)
-  }
-
   test("SCALE_NOTCH merge: legacy bare object migrates to `full`; " +
       "probes append; a new full run preserves probe history (r17 №4)") {
+    import org.json4s.jackson.JsonMethods.parse
     // First-ever probe, no artifact yet.
-    val p1 = ScaleNotch.mergeNotch(None, None, Some("""{"copies":10}"""))
-    assert(p1 ==
-      """{"metric":"scale_notch","full":null,"probes":[{"copies":10}]}""")
-    // Legacy pre-r18 artifact was the bare full-run object: a probe
-    // append must keep it, verbatim, under `full`.
+    val p1 = ScaleNotch.mergeNotch(None, None, Some(parse("""{"copies":10}""")))
+    assert(p1 == parse(
+      """{"metric":"scale_notch","full":null,"probes":[{"copies":10}]}"""))
+    // The older artifact was the bare full-run object: a probe append
+    // must keep it, unchanged, under `full`.
     val legacy = """{"metric":"scale_notch","copies":10,"batch":{}}"""
-    val p2 = ScaleNotch.mergeNotch(Some(legacy), None,
-      Some("""{"copies":30}"""))
-    assert(p2 == s"""{"metric":"scale_notch","full":$legacy,""" +
-      """"probes":[{"copies":30}]}""")
+    val p2 = ScaleNotch.mergeNotch(Some(parse(legacy)), None,
+      Some(parse("""{"copies":30}""")))
+    assert(p2 == parse(s"""{"metric":"scale_notch","full":$legacy,""" +
+      """"probes":[{"copies":30}]}"""))
     // Second probe appends after the first.
-    val p3 = ScaleNotch.mergeNotch(Some(p2), None, Some("""{"copies":50}"""))
-    assert(p3 == s"""{"metric":"scale_notch","full":$legacy,""" +
-      """"probes":[{"copies":30},{"copies":50}]}""")
+    val p3 = ScaleNotch.mergeNotch(Some(p2), None, Some(parse("""{"copies":50}""")))
+    assert(p3 == parse(s"""{"metric":"scale_notch","full":$legacy,""" +
+      """"probes":[{"copies":30},{"copies":50}]}"""))
     // A fresh full run replaces `full` and keeps every probe.
-    val p4 = ScaleNotch.mergeNotch(Some(p3), Some("""{"new":1}"""), None)
-    assert(p4 == """{"metric":"scale_notch","full":{"new":1},""" +
-      """"probes":[{"copies":30},{"copies":50}]}""")
-    // No-op merge round-trips byte-identically.
+    val p4 = ScaleNotch.mergeNotch(Some(p3), Some(parse("""{"new":1}""")), None)
+    assert(p4 == parse("""{"metric":"scale_notch","full":{"new":1},""" +
+      """"probes":[{"copies":30},{"copies":50}]}"""))
+    // No-op merge returns the artifact unchanged.
     assert(ScaleNotch.mergeNotch(Some(p4), None, None) == p4)
   }
 }

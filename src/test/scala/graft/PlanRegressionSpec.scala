@@ -200,6 +200,7 @@ class PlanRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("no cartesian product in any query plan; no artifact built after prebuild") {
     // A fresh copy, so prebuild really builds every artifact here and a
     // query that reads one prebuild skipped would build it in the loop.
+    // Building a query must also leave the session conf as it found it.
     val src = java.nio.file.Paths.get(sf)
     val dir = java.nio.file.Files.createTempDirectory("graft-prebuild-sf")
     val files = java.nio.file.Files.list(src)
@@ -209,8 +210,12 @@ class PlanRegressionSpec extends AnyFunSuite with BeforeAndAfterAll {
       Indexes.prebuild(spark, dir.toString)
       def builds = Indexes.declared.map(a => a.name -> a.builds).toMap
       val before = builds
+      val conf = spark.conf.getAll
       for ((name, fn) <- SparkEntry.queries) {
         val p = fn(spark, dir.toString).queryExecution.executedPlan.toString
+        val confNow = spark.conf.getAll
+        if (confNow != conf) fail(s"$name changed the session conf: " +
+          s"${(confNow.toSet diff conf.toSet) ++ (conf.toSet diff confNow.toSet)}")
         withClue(s"$name:\n$p") {
           assert(!p.contains("CartesianProduct"),
             s"$name uses a cartesian product")
