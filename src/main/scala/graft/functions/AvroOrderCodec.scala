@@ -1,29 +1,26 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
-
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{DecoderFactory, EncoderFactory}
-import org.apache.avro.util.Utf8
 
 import org.apache.spark.sql.{Column, GraftSqlShim}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, UnaryExpression}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Binary Avro codec for the reference's Order record
   * (reference: schemas/order.avsc — orderId string, product string,
   * price float, timestamp long timestamp-millis).
   *
   * The container ships Avro core (avro-1.12.1.jar) but not the spark-avro
-  * module, so this is a from-scratch pair of Catalyst expressions. They
-  * follow the same design spark-avro uses: per-partition reusable
-  * reader/writer/decoder state, and codegen that calls back into the
-  * expression instance via `addReferenceObj`, so the surrounding operators
-  * stay inside one whole-stage-codegen span.
+  * module, so these are from-scratch Catalyst expressions. They are a
+  * thin Order-typed layer over the shared row↔record mapping in
+  * `ConfluentAvroGeneric.scala` ([[AvroRowWriter]]/[[AvroRowReader]]),
+  * the same one [[ToConfluentAvro]]/[[FromConfluentAvro]] use before
+  * adding the Confluent frame. What stays here is the Order surface:
+  * declared Spark types, SQL names, null and error messages. Codegen
+  * calls back into the expression instance via `addReferenceObj`, so the
+  * surrounding operators stay inside one whole-stage-codegen span.
   */
 object AvroOrder {
   val schemaJson: String =
@@ -95,8 +92,7 @@ case class ToAvroOrder(child: Expression)
   // child is a struct<orderId,product,price,timestamp> by construction.
   override def dataType: DataType = BinaryType
 
-  @transient private lazy val writer =
-    new GenericDatumWriter[GenericRecord](AvroOrder.schema)
+  @transient private lazy val writer = new AvroRowWriter(AvroOrder.schema)
 
   def encode(row: InternalRow): Array[Byte] = {
     var i = 0
@@ -107,16 +103,7 @@ case class ToAvroOrder(child: Expression)
             "but schemas/order.avsc declares no null union")
       i += 1
     }
-    val rec = new GenericData.Record(AvroOrder.schema)
-    rec.put(0, new Utf8(row.getUTF8String(0).toString))
-    rec.put(1, new Utf8(row.getUTF8String(1).toString))
-    rec.put(2, java.lang.Float.valueOf(row.getFloat(2)))
-    rec.put(3, java.lang.Long.valueOf(row.getLong(3)))
-    val out = new ByteArrayOutputStream(64)
-    val enc = EncoderFactory.get().directBinaryEncoder(out, null)
-    writer.write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    writer.write(row)
   }
 
   override protected def nullSafeEval(input: Any): Any =
@@ -138,40 +125,43 @@ object ToAvroOrder {
     GraftSqlShim.column(AvroOrder.toAvroBuilder(Seq(GraftSqlShim.expression(order))))
 }
 
-/** Avro binary → struct<orderId,product,price,timestamp>. */
-case class FromAvroOrder(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = AvroOrder.sparkType
+/** Avro Order binary (written under schemas/order.avsc) → struct under
+  * `readerSchema`. The strict decoders below differ only in that schema,
+  * their SQL name and their error hint. */
+sealed abstract class AvroOrderDecoder extends UnaryExpression {
+  protected def sqlName: String
+  protected def readerSchema: Schema
+  protected def malformedHint: String = ""
 
   @transient private lazy val reader =
-    new GenericDatumReader[GenericRecord](AvroOrder.schema)
+    new AvroRowReader(AvroOrder.schema, readerSchema)
 
   def decode(bytes: Array[Byte]): InternalRow =
-    try {
-      val dec = DecoderFactory.get().binaryDecoder(bytes, null)
-      val rec = reader.read(null, dec)
-      InternalRow(
-        UTF8String.fromString(rec.get(0).toString),
-        UTF8String.fromString(rec.get(1).toString),
-        rec.get(2).asInstanceOf[Float],
-        rec.get(3).asInstanceOf[Long])
-    } catch {
+    try reader.read(bytes)
+    catch {
       case e: Exception =>
         throw new IllegalArgumentException(
-          s"from_avro_order: malformed Avro Order payload (${bytes.length} bytes); " +
-            "use try_from_avro_order to route corrupt records to a DLQ instead",
-          e)
+          s"$sqlName: malformed Avro Order payload (${bytes.length} bytes)" +
+            malformedHint, e)
     }
 
   override protected def nullSafeEval(input: Any): Any =
     decode(input.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("fromAvroOrder", this)
+    val ref = ctx.addReferenceObj("avroOrderDecoder", this)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = $ref.decode($c);")
   }
+}
+
+/** Avro binary → struct<orderId,product,price,timestamp>. */
+case class FromAvroOrder(child: Expression) extends AvroOrderDecoder {
+  override def dataType: DataType = AvroOrder.sparkType
+  override protected def sqlName: String = "from_avro_order"
+  override protected def readerSchema: Schema = AvroOrder.schema
+  override protected def malformedHint: String =
+    "; use try_from_avro_order to route corrupt records to a DLQ instead"
 
   override protected def withNewChildInternal(newChild: Expression): FromAvroOrder =
     copy(child = newChild)
@@ -190,38 +180,10 @@ object FromAvroOrder {
   * registry promises (reference: the registry client in
   * src/utils/kafka_utils.py); no re-encode of the stored stream needed.
   */
-case class FromAvroOrderV2(child: Expression)
-    extends UnaryExpression {
-
+case class FromAvroOrderV2(child: Expression) extends AvroOrderDecoder {
   override def dataType: DataType = AvroOrder.sparkTypeV2
-
-  @transient private lazy val reader =
-    new GenericDatumReader[GenericRecord](AvroOrder.schema, AvroOrder.schemaV2)
-
-  def decode(bytes: Array[Byte]): InternalRow =
-    try {
-      val dec = DecoderFactory.get().binaryDecoder(bytes, null)
-      val rec = reader.read(null, dec)
-      InternalRow(
-        UTF8String.fromString(rec.get(0).toString),
-        UTF8String.fromString(rec.get(1).toString),
-        rec.get(2).asInstanceOf[Double],
-        rec.get(3).asInstanceOf[Long],
-        UTF8String.fromString(rec.get(4).toString))
-    } catch {
-      case e: Exception =>
-        throw new IllegalArgumentException(
-          s"from_avro_order_v2: malformed Avro Order payload (${bytes.length} bytes)", e)
-    }
-
-  override protected def nullSafeEval(input: Any): Any =
-    decode(input.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("fromAvroOrderV2", this)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.decode($c);")
-  }
+  override protected def sqlName: String = "from_avro_order_v2"
+  override protected def readerSchema: Schema = AvroOrder.schemaV2
 
   override protected def withNewChildInternal(newChild: Expression): FromAvroOrderV2 =
     copy(child = newChild)

@@ -12,7 +12,7 @@ import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -20,17 +20,18 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.streaming.{ConfluentWire, FileSchemaRegistry}
 
-/** SCHEMA-PARAMETERIZED Confluent codec — the generalization of the
-  * Order-wired [[ToConfluentOrderV1]]/[[FromConfluentOrder]] family to
-  * ARBITRARY record schemas, which is the surface the reference's
-  * registry-backed serializer actually has (it is constructed around
-  * whatever schema the registry names, not one hard-wired record).
-  * The resolving-reader cache machinery was already general; this adds
-  * the general row↔record bridge:
+/** The ONE Avro row↔record mapping in the engine, for ANY record
+  * schema — the surface the reference's registry-backed serializer has
+  * (it is constructed around whatever schema the registry names, not
+  * one hard-wired record). Everything that writes or reads Avro binary
+  * from a Catalyst row goes through here:
   *
   *  - [[ConfluentAvroBridge.sparkType]] maps an Avro schema to the
   *    Spark type the decoded column carries (records→structs,
   *    `["null",T]` unions→nullable, arrays, all primitives, bytes).
+  *  - [[AvroRowWriter]]/[[AvroRowReader]] are the unframed binary write
+  *    and (resolving) read; the Order expressions in `AvroOrderCodec`
+  *    are thin wrappers over them.
   *  - [[ToConfluentAvro]] encodes any struct column under the WRITER
   *    schema a registry id names and frames it `0x00+id+avro`.
   *  - [[FromConfluentAvro]] unframes, resolves the per-message writer
@@ -38,9 +39,9 @@ import graft.streaming.{ConfluentWire, FileSchemaRegistry}
   *    the reader-shaped struct — mixed-version topics of ANY record
   *    type under one consumer expression.
   *
-  * Same executor-locality contract as the Order family: writer schemas
-  * and resolving readers are cached per (registryDir, id[, reader]) in
-  * TrieMaps, so the registry is touched once per executor per id.
+  * Executor locality: writer schemas and resolving readers are cached
+  * per (registry, id[, reader JSON]) in TrieMaps, so the registry is
+  * touched once per executor per id.
   */
 object ConfluentAvroBridge {
 
@@ -187,15 +188,38 @@ object ConfluentAvroBridge {
       out(i) = avroValueToRow(fields.get(i).schema(), rec.get(i))
       i += 1
     }
-    InternalRow.fromSeq(out.toIndexedSeq)
+    new GenericInternalRow(out)
   }
+}
+
+/** Unframed Avro binary under one writer `schema`, from any struct row
+  * shaped to it (field order = the schema's). */
+final class AvroRowWriter(schema: Schema) {
+  private val writer = new GenericDatumWriter[GenericRecord](schema)
+
+  def write(row: InternalRow): Array[Byte] = {
+    val out = new ByteArrayOutputStream(64)
+    val enc = EncoderFactory.get().directBinaryEncoder(out, null)
+    writer.write(ConfluentAvroBridge.rowToRecord(schema, row), enc)
+    enc.flush()
+    out.toByteArray
+  }
+}
+
+/** Unframed Avro binary written under `writer`, resolved against
+  * `reader` (promotions, added-field defaults), → a reader-shaped row. */
+final class AvroRowReader(writer: Schema, reader: Schema) {
+  private val datum = new GenericDatumReader[GenericRecord](writer, reader)
+
+  def read(bytes: Array[Byte]): InternalRow =
+    ConfluentAvroBridge.recordToRow(reader,
+      datum.read(null, DecoderFactory.get().binaryDecoder(bytes, null)))
 }
 
 /** Executor-local caches for the generic codec. */
 object ConfluentAvroCodec {
   private val schemaCache = TrieMap.empty[(String, Int), Schema]
-  private val readerCache =
-    TrieMap.empty[(String, Int, String), GenericDatumReader[GenericRecord]]
+  private val readerCache = TrieMap.empty[(String, Int, String), AvroRowReader]
 
   /** Registry TRANSPORT dispatch — the `schema.registry.url` swap,
     * executed: an `http(s)://` spec resolves through the Confluent REST
@@ -215,13 +239,14 @@ object ConfluentAvroCodec {
     schemaCache.getOrElseUpdate((registryDir, id),
       clientFor(registryDir).byId(id))
 
+  /** Keyed by the reader's JSON text as the caller holds it: this runs
+    * per decoded row, and `Schema.toString` re-serializes the schema on
+    * every call. */
   private[graft] def readerFor(registryDir: String, writerId: Int,
-      reader: Schema): GenericDatumReader[GenericRecord] =
-    readerCache.getOrElseUpdate(
-      (registryDir, writerId, reader.toString), {
-        val writer = schemaFor(registryDir, writerId)
-        new GenericDatumReader[GenericRecord](writer, reader)
-      })
+      readerSchemaJson: String): AvroRowReader =
+    readerCache.getOrElseUpdate((registryDir, writerId, readerSchemaJson),
+      new AvroRowReader(schemaFor(registryDir, writerId),
+        new Schema.Parser().parse(readerSchemaJson)))
 }
 
 /** Any struct column → Confluent-framed payload under the WRITER schema
@@ -232,19 +257,11 @@ case class ToConfluentAvro(child: Expression, registryDir: String,
 
   override def dataType: DataType = BinaryType
 
-  @transient private lazy val writerSchema =
-    ConfluentAvroCodec.schemaFor(registryDir, schemaId)
   @transient private lazy val writer =
-    new GenericDatumWriter[GenericRecord](writerSchema)
+    new AvroRowWriter(ConfluentAvroCodec.schemaFor(registryDir, schemaId))
 
-  def encode(row: InternalRow): Array[Byte] = {
-    val rec = ConfluentAvroBridge.rowToRecord(writerSchema, row)
-    val out = new ByteArrayOutputStream(64)
-    val enc = EncoderFactory.get().directBinaryEncoder(out, null)
-    writer.write(rec, enc)
-    enc.flush()
-    ConfluentWire.frame(schemaId, out.toByteArray)
-  }
+  def encode(row: InternalRow): Array[Byte] =
+    ConfluentWire.frame(schemaId, writer.write(row))
 
   override protected def nullSafeEval(input: Any): Any =
     encode(input.asInstanceOf[InternalRow])
@@ -266,22 +283,18 @@ case class ToConfluentAvro(child: Expression, registryDir: String,
 case class FromConfluentAvro(child: Expression, registryDir: String,
     readerSchemaJson: String) extends UnaryExpression {
 
-  @transient private lazy val readerSchema =
-    new Schema.Parser().parse(readerSchemaJson)
-
-  // Catalyst calls dataType many times per planning pass — derive it
-  // once from the cached reader schema (recomputed lazily after
-  // deserialization on an executor), never by re-parsing the JSON.
+  // Catalyst calls dataType many times per planning pass — parse the
+  // reader schema once (recomputed lazily after deserialization on an
+  // executor), never per call.
   @transient private lazy val sparkDataType =
-    ConfluentAvroBridge.sparkType(readerSchema)
+    ConfluentAvroBridge.sparkType(new Schema.Parser().parse(readerSchemaJson))
 
   override def dataType: DataType = sparkDataType
 
   def decode(bytes: Array[Byte]): InternalRow = {
     val (id, payload) = ConfluentWire.unframe(bytes)
-    val reader = ConfluentAvroCodec.readerFor(registryDir, id, readerSchema)
-    val dec = DecoderFactory.get().binaryDecoder(payload, null)
-    ConfluentAvroBridge.recordToRow(readerSchema, reader.read(null, dec))
+    ConfluentAvroCodec.readerFor(registryDir, id, readerSchemaJson)
+      .read(payload)
   }
 
   override protected def nullSafeEval(input: Any): Any =

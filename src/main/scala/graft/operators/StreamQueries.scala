@@ -54,19 +54,13 @@ object StreamQueries {
       reg.register("orders-value", AvroOrder.schemaV2))
   }
 
-  /** MIXED-SCHEMA-VERSION TOPIC through the registry, inside ONE plan:
-    * even event_ids are published under the v1 writer (float price),
-    * odd under the v2 writer (double price + currency), each framed
-    * with its registry id (Confluent wire format) — then EVERY message
-    * is decoded by the single [[graft.functions.FromConfluentOrder]]
-    * consumer expression, which looks the writer up BY ID and resolves
-    * to the v2 reader. The aggregate hash-matching a plain-SQL replay
-    * (branching on the writer version for the float→double promotion)
-    * proves the registry+resolution path is exact end to end. The
-    * is_v1 audit column is produce-side; the decode path sees only
-    * wire bytes. */
-  def confluentRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val (regDir, v1Id, v2Id) = confluentRegistry
+  /** The producer half of `q_confluent_roundtrip`: events (`event_id`,
+    * `event_type`, `value`, `ts`) → Confluent-framed Order payloads
+    * (`wire`), even event_ids under the v1 writer (float price), odd
+    * under the v2 writer (double price + currency), plus the
+    * produce-side `is_v1` audit column. */
+  private[graft] def confluentOrderWire(events: DataFrame, regDir: String,
+      v1Id: Int, v2Id: Int): DataFrame = {
     val orderId =
       "concat('ORD-', lpad(cast(event_id as string), 7, '0'))"
     val v1Struct = expr(s"named_struct('orderId', $orderId," +
@@ -77,15 +71,29 @@ object StreamQueries {
       " 'timestamp', ts div 1000000," +
       " 'currency', CASE WHEN event_id % 3 = 0 THEN 'EUR'" +
       " ELSE 'USD' END)")
-    Tables.events(spark, dir)
-      .select(
-        when(col("event_id") % 2 === 0,
-          graft.functions.ToConfluentOrderV1(v1Struct, v1Id))
-          .otherwise(graft.functions.ToConfluentOrderV2(v2Struct, v2Id))
-          .as("wire"),
-        (col("event_id") % 2 === 0).as("is_v1"))
-      .select(graft.functions.FromConfluentOrder(col("wire"), regDir)
-        .as("o"), col("is_v1"))
+    events.select(
+      when(col("event_id") % 2 === 0,
+        graft.functions.ToConfluentAvro(v1Struct, regDir, v1Id))
+        .otherwise(graft.functions.ToConfluentAvro(v2Struct, regDir, v2Id))
+        .as("wire"),
+      (col("event_id") % 2 === 0).as("is_v1"))
+  }
+
+  /** MIXED-SCHEMA-VERSION TOPIC through the registry, inside ONE plan:
+    * [[confluentOrderWire]] publishes each event under the v1 or v2
+    * Order writer, framed with its registry id (Confluent wire format)
+    * — then EVERY message is decoded by the single generic
+    * [[graft.functions.FromConfluentAvro]] consumer expression under
+    * the v2 Order reader, which looks the writer up BY ID and resolves
+    * it. The aggregate hash-matching a plain-SQL replay (branching on
+    * the writer version for the float→double promotion) proves the
+    * registry+resolution path is exact end to end. The is_v1 audit
+    * column is produce-side; the decode path sees only wire bytes. */
+  def confluentRoundtrip(spark: SparkSession, dir: String): DataFrame = {
+    val (regDir, v1Id, v2Id) = confluentRegistry
+    confluentOrderWire(Tables.events(spark, dir), regDir, v1Id, v2Id)
+      .select(graft.functions.FromConfluentAvro(col("wire"), regDir,
+        AvroOrder.schemaV2Json).as("o"), col("is_v1"))
       .groupBy(col("o.product").as("product"),
         col("o.currency").as("currency"))
       .agg(count(lit(1)).as("order_count"),
@@ -131,7 +139,7 @@ object StreamQueries {
 
   /** A SECOND record type (the reference's DLQ message,
     * avro_order_consumer.py:117-134) mixed-version round-tripped
-    * through the GENERIC schema-parameterized codec
+    * through the same generic codec as `q_confluent_roundtrip`
     * ([[graft.functions.ToConfluentAvro]]/[[FromConfluentAvro]] —
     * no Order-specific code anywhere on this path): even event_ids
     * publish under the v1 writer (retry_count int, no consumer_group),

@@ -4,6 +4,8 @@ import java.net.{HttpURLConnection, InetSocketAddress, URI, URLDecoder, URLEncod
 import java.nio.charset.StandardCharsets
 
 import org.apache.avro.Schema
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** EXECUTED HTTP TRANSPORT for the schema-registry seam — the piece the
   * reference configures as `schema.registry.url`
@@ -34,54 +36,22 @@ import org.apache.avro.Schema
   */
 object SchemaRegistryJson {
 
-  /** JSON string escape for the one field these routes carry (an Avro
-    * schema is itself JSON, so the embedded string is quote-dense). */
-  def escape(s: String): String = {
-    val sb = new StringBuilder(s.length + 16)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
+  /** One flat JSON object, compact. */
+  def obj(fields: (String, JValue)*): String =
+    JsonMethods.compact(JObject(fields.toList))
 
-  /** Extract `"field":"<string>"` from a flat JSON object, handling
-    * escapes — the only string-valued reads these routes need. */
-  def stringField(json: String, field: String): Option[String] = {
-    val key = "\"" + field + "\""
-    val at = json.indexOf(key)
-    if (at < 0) return None
-    var i = at + key.length
-    while (i < json.length && (json(i) == ':' || json(i).isWhitespace)) i += 1
-    if (i >= json.length || json(i) != '"') return None
-    i += 1
-    val sb = new StringBuilder
-    while (i < json.length && json(i) != '"') {
-      if (json(i) == '\\' && i + 1 < json.length) {
-        json(i + 1) match {
-          case '"' => sb.append('"'); i += 2
-          case '\\' => sb.append('\\'); i += 2
-          case 'n' => sb.append('\n'); i += 2
-          case 'r' => sb.append('\r'); i += 2
-          case 't' => sb.append('\t'); i += 2
-          case 'u' =>
-            sb.append(Integer.parseInt(json.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case other => sb.append(other); i += 2
-        }
-      } else { sb.append(json(i)); i += 1 }
-    }
-    Some(sb.toString)
-  }
+  /** Confluent's error body: `{"error_code":N,"message":"…"}`. */
+  def error(code: Int, message: String): String =
+    obj("error_code" -> JInt(code), "message" -> JString(message))
 
-  def intField(json: String, field: String): Option[Int] =
-    ("\"" + field + "\"\\s*:\\s*(-?\\d+)").r
-      .findFirstMatchIn(json).map(_.group(1).toInt)
+  /** `body` parsed, or None when it is not JSON at all. */
+  def parse(body: String): Option[JValue] = JsonMethods.parseOpt(body)
+
+  def stringField(json: JValue, field: String): Option[String] =
+    json \ field match { case JString(v) => Some(v); case _ => None }
+
+  def intField(json: JValue, field: String): Option[Int] =
+    json \ field match { case JInt(v) => Some(v.toInt); case _ => None }
 }
 
 /** Minimal in-process registry server (JDK `com.sun.net.httpserver`,
@@ -108,7 +78,7 @@ final class SchemaRegistryHttpServer(delegate: SchemaRegistryClient,
 
   private def notFound(ex: com.sun.net.httpserver.HttpExchange,
       code: Int, msg: String): Unit =
-    respond(ex, 404, s"""{"error_code":$code,"message":"${escape(msg)}"}""")
+    respond(ex, 404, error(code, msg))
 
   server.createContext("/", (ex: com.sun.net.httpserver.HttpExchange) =>
     try {
@@ -127,7 +97,7 @@ final class SchemaRegistryHttpServer(delegate: SchemaRegistryClient,
           val subject = URLDecoder.decode(rawSubject, "UTF-8")
           val body = new String(ex.getRequestBody.readAllBytes(),
             StandardCharsets.UTF_8)
-          stringField(body, "schema") match {
+          parse(body).flatMap(stringField(_, "schema")) match {
             case Some(schemaJson) =>
               // Unparseable Avro is the documented 422 ("invalid
               // schema"), not a 500 — Confluent's error_code 42201.
@@ -138,23 +108,20 @@ final class SchemaRegistryHttpServer(delegate: SchemaRegistryClient,
               parsed match {
                 case Right(schema) =>
                   val id = delegate.register(subject, schema)
-                  respond(ex, 200, s"""{"id":$id}""")
-                case Left(msg) => respond(ex, 422,
-                  s"""{"error_code":42201,"message":"${escape(s"invalid schema: $msg")}"}""")
+                  respond(ex, 200, obj("id" -> JInt(id)))
+                case Left(msg) =>
+                  respond(ex, 422, error(42201, s"invalid schema: $msg"))
               }
             case None =>
-              respond(ex, 422,
-                """{"error_code":42201,"message":"missing schema field"}""")
+              respond(ex, 422, error(42201, "missing schema field"))
           }
         case ("GET", "/subjects") =>
-          val names = delegate.subjects().sorted
-            .map(s => "\"" + escape(s) + "\"").mkString(",")
-          respond(ex, 200, s"[$names]")
+          respond(ex, 200, JsonMethods.compact(
+            JArray(delegate.subjects().sorted.map(JString(_)).toList)))
         case ("GET", SchemaById(id)) =>
           try {
             val schema = delegate.byId(id.toInt)
-            respond(ex, 200,
-              s"""{"schema":"${escape(schema.toString)}"}""")
+            respond(ex, 200, obj("schema" -> JString(schema.toString)))
           } catch { case _: IllegalArgumentException =>
             notFound(ex, 40403, s"Schema $id not found")
           }
@@ -162,8 +129,8 @@ final class SchemaRegistryHttpServer(delegate: SchemaRegistryClient,
           val subject = URLDecoder.decode(rawSubject, "UTF-8")
           delegate.latest(subject) match {
             case Some((id, schema)) => respond(ex, 200,
-              s"""{"subject":"${escape(subject)}","id":$id,""" +
-                s""""schema":"${escape(schema.toString)}"}""")
+              obj("subject" -> JString(subject), "id" -> JInt(id),
+                "schema" -> JString(schema.toString)))
             case None => notFound(ex, 40401, s"Subject '$subject' not found")
           }
         case _ =>
@@ -171,8 +138,7 @@ final class SchemaRegistryHttpServer(delegate: SchemaRegistryClient,
       }
     } catch {
       case e: Throwable =>
-        respond(ex, 500,
-          s"""{"error_code":50001,"message":"${escape(String.valueOf(e.getMessage))}"}""")
+        respond(ex, 500, error(50001, String.valueOf(e.getMessage)))
     } finally ex.close())
 
   server.setExecutor(pool)
@@ -229,7 +195,7 @@ final class HttpSchemaRegistryClient(baseUrl: String)
   override def register(subject: String, schema: Schema): Int = {
     val (status, body) = request("POST",
       s"/subjects/${enc(subject)}/versions",
-      Some(s"""{"schema":"${escape(schema.toString)}"}"""))
+      Some(obj("schema" -> JString(schema.toString))))
     // Confluent's documented non-200s carry distinct semantics — map
     // them to distinct exception types so a caller can react (retry a
     // 500, surface a 409 to the schema author) instead of one opaque
@@ -238,8 +204,9 @@ final class HttpSchemaRegistryClient(baseUrl: String)
     //   422 = invalid/unparseable schema
     status match {
       case 200 =>
-        intField(body, "id").getOrElse(throw new IllegalStateException(
-          s"registry response missing id: $body"))
+        parse(body).flatMap(intField(_, "id")).getOrElse(
+          throw new IllegalStateException(
+            s"registry response missing id: $body"))
       case 409 => throw new IllegalStateException(
         s"schema registry: schema incompatible with subject '$subject' " +
           s"(409): $body")
@@ -255,42 +222,15 @@ final class HttpSchemaRegistryClient(baseUrl: String)
     val (status, body) = request("GET", "/subjects", None)
     require(status == 200,
       s"schema registry: GET /subjects → $status $body")
-    // Body is a flat JSON array of strings; reuse the escape-aware
-    // string scanner by walking the array elements. The scanner only
-    // runs on a body that IS an array (r17 advice: a non-array 200 body
-    // would otherwise have every quoted token read as a subject name),
-    // and a truncated \u escape fails loudly instead of throwing a bare
-    // StringIndexOutOfBoundsException.
-    require(body.dropWhile(_.isWhitespace).startsWith("["),
-      s"schema registry: GET /subjects body is not a JSON array: $body")
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var i = 0
-    while (i < body.length) {
-      if (body(i) == '"') {
-        val sb = new StringBuilder
-        i += 1
-        while (i < body.length && body(i) != '"') {
-          if (body(i) == '\\' && i + 1 < body.length) {
-            body(i + 1) match {
-              case 'u' =>
-                if (i + 6 > body.length)
-                  throw new IllegalStateException(
-                    s"schema registry: truncated \\u escape in /subjects body: $body")
-                sb.append(Integer.parseInt(
-                  body.substring(i + 2, i + 6), 16).toChar)
-                i += 6
-              case 'n' => sb.append('\n'); i += 2
-              case 'r' => sb.append('\r'); i += 2
-              case 't' => sb.append('\t'); i += 2
-              case c => sb.append(c); i += 2
-            }
-          } else { sb.append(body(i)); i += 1 }
-        }
-        i += 1
-        out += sb.toString
-      } else i += 1
+    parse(body) match {
+      case Some(JArray(names)) => names.map {
+        case JString(name) => name
+        case other => throw new IllegalStateException(
+          s"schema registry: non-string subject $other in /subjects body: $body")
+      }
+      case _ => throw new IllegalArgumentException(
+        s"schema registry: GET /subjects body is not a JSON array: $body")
     }
-    out.toSeq
   }
 
   override def byId(id: Int): Schema = {
@@ -299,7 +239,7 @@ final class HttpSchemaRegistryClient(baseUrl: String)
       s"schema registry: unknown schema id $id ($baseUrl) — " +
         s"refusing to guess a writer schema ($status $body)")
     new Schema.Parser().parse(
-      stringField(body, "schema").getOrElse(
+      parse(body).flatMap(stringField(_, "schema")).getOrElse(
         throw new IllegalStateException(
           s"registry response missing schema: $body")))
   }
@@ -312,8 +252,9 @@ final class HttpSchemaRegistryClient(baseUrl: String)
       require(status == 200,
         s"schema registry: GET latest($subject) → $status $body")
       for {
-        id <- intField(body, "id")
-        schemaJson <- stringField(body, "schema")
+        json <- parse(body)
+        id <- intField(json, "id")
+        schemaJson <- stringField(json, "schema")
       } yield id -> new Schema.Parser().parse(schemaJson)
     }
   }

@@ -140,24 +140,29 @@ class CodegenParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     val v1 = reg.register("orders-value", graft.functions.AvroOrder.schema)
     val v2 = reg.register("orders-value",
       graft.functions.AvroOrder.schemaV2)
-    assertParity("ConfluentOrderCodec")(
-      Tables.orders(spark, sfDir).filter(col("o_orderkey") < 200)
+    // v1 payloads (float price) decode under the v2 reader: price is
+    // promoted to double and currency takes its default 'USD'.
+    def decoded = Tables.orders(spark, sfDir).filter(col("o_orderkey") < 200)
         .select(
           when(col("o_orderkey") % 2 === 0,
-            graft.functions.ToConfluentOrderV1(expr(
+            graft.functions.ToConfluentAvro(expr(
               "named_struct('orderId', CAST(o_orderkey AS STRING)," +
                 "'product', o_orderpriority," +
                 "'price', CAST(o_totalprice AS FLOAT)," +
                 "'timestamp', unix_micros(CAST(o_orderdate AS TIMESTAMP)))"
-            ), v1))
-            .otherwise(graft.functions.ToConfluentOrderV2(expr(
+            ), d, v1))
+            .otherwise(graft.functions.ToConfluentAvro(expr(
               "named_struct('orderId', CAST(o_orderkey AS STRING)," +
                 "'product', o_orderpriority," +
                 "'price', CAST(o_totalprice AS DOUBLE)," +
                 "'timestamp', unix_micros(CAST(o_orderdate AS TIMESTAMP))," +
-                "'currency', 'EUR')"), v2)).as("wire"))
+                "'currency', 'EUR')"), d, v2)).as("wire"))
         .select(md5(col("wire")).as("digest"),
-          graft.functions.FromConfluentOrder(col("wire"), d).as("back")))
+          graft.functions.FromConfluentAvro(col("wire"), d,
+            graft.functions.AvroOrder.schemaV2Json).as("back"))
+    assertParity("ConfluentAvroOrder")(decoded)
+    assert(decoded.select("back.currency").distinct().collect()
+      .map(_.getString(0)).toSet == Set("USD", "EUR"))
   }
 
   test("GENERIC Confluent codec parity (second record type, mixed versions)") {

@@ -31,6 +31,54 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getString(1) == "Monitor")
     assert(row.getFloat(2) == 349.99f)
     assert(row.getLong(3) == 1704067200000L)
+
+    // Golden bytes: the encoders' exact output for fixed rows, so the
+    // Avro binary and the Confluent frame cannot drift unnoticed.
+    val avroHex = spark.sql(
+      """SELECT hex(to_avro_order(named_struct('orderId', o, 'product', p,
+        |  'price', CAST(f AS FLOAT), 'timestamp', t))) FROM VALUES
+        |  ('ORD-0000007', 'Monitor', 349.99, 1704067200000L),
+        |  ('ORD-0000008', 'Keyboard', 49.5, 1704067200000L),
+        |  ('', 'Café — ×', -0.0, -1L) AS v(o, p, f, t)""".stripMargin)
+      .collect().map(_.getString(0)).toSeq
+    assert(avroHex == Seq(
+      "164F52442D303030303030370E4D6F6E69746F72B8FEAE4380D08FA59863",
+      "164F52442D30303030303038104B6579626F6172640000464280D08FA59863",
+      "0018436166C3A920E2809420C3970000000001"))
+    // q_confluent_roundtrip's producer half: even event_id → v1 frame
+    // (registry id 1), odd → v2 frame (id 2; currency EUR when % 3 = 0).
+    val regDir = java.nio.file.Files
+      .createTempDirectory("graft-golden-registry").toFile.getAbsolutePath
+    val reg = new graft.streaming.FileSchemaRegistry(regDir)
+    val v1Id = reg.register("orders-value", graft.functions.AvroOrder.schema)
+    val v2Id = reg.register("orders-value", graft.functions.AvroOrder.schemaV2)
+    assert((v1Id, v2Id) == (1, 2))
+    val events = spark.sql(
+      """SELECT * FROM VALUES
+        |  (2L, 'Laptop', 1299.99D, 1704067200123456789L),
+        |  (3L, 'Monitor', 349.99D, 1704070800000000000L),
+        |  (5L, 'Mouse', 19.5D, 1704074400000000000L)
+        |AS e(event_id, event_type, value, ts)""".stripMargin)
+    val wireHex = graft.operators.StreamQueries
+      .confluentOrderWire(events, regDir, v1Id, v2Id)
+      .selectExpr("hex(wire)").collect().map(_.getString(0)).toSeq
+    assert(wireHex == Seq(
+      "0000000001164F52442D303030303030320C4C6170746F70AE7FA244F6D18FA59863",
+      "0000000002164F52442D303030303030330E4D6F6E69746F72A4703D0AD7DF7540" +
+        "808AC7A8986306455552",
+      "0000000002164F52442D303030303030350A4D6F7573650000000000803340" +
+        "80C4FEAB986306555344"))
+  }
+
+  test("to_avro_order on a null product fails naming the field") {
+    val e = intercept[Exception](spark.sql(
+      """SELECT to_avro_order(named_struct('orderId', 'ORD-0000009',
+        |  'product', CAST(NULL AS STRING), 'price', CAST(1.0 AS FLOAT),
+        |  'timestamp', 1704067200000L)) AS b""".stripMargin).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("to_avro_order: field 'product' is null")),
+      msgs.mkString("\n"))
   }
 
   test("v2 reader and permissive decode resolve through the extension") {

@@ -213,6 +213,17 @@ class SchemaRegistrySpec extends AnyFunSuite {
       assert(fileClient.subjects().toSet == exotic.toSet)
       assert(http.subjects().toSet == exotic.toSet,
         "GET /subjects must list every registered subject, undamaged")
+      // And an exotic schema body: a doc holding '"', '\', a tab and a
+      // non-ASCII character survives register → byId → latest.
+      val docSchema = new org.apache.avro.Schema.Parser().parse(
+        """{"type":"record","name":"Doc","namespace":"graft",
+          |"doc":"say \"hi\" \\ then\ttab, café",
+          |"fields":[{"name":"id","type":"long"}]}""".stripMargin)
+      assert(docSchema.getDoc == "say \"hi\" \\ then\ttab, café")
+      val docId = http.register("orders+value", docSchema)
+      assert(http.byId(docId) == docSchema &&
+        http.byId(docId).getDoc == docSchema.getDoc)
+      assert(http.latest("orders+value") == Some(docId -> docSchema))
     } finally server.stop()
   }
 
