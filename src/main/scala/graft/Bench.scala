@@ -506,7 +506,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadAvgNow()
     val spark = GraftSession.create("graft-bench")
-    spark.sparkContext.setLogLevel("WARN")
 
     spark.range(1L << 20).selectExpr("sum(id)").collect() // JVM warmup
 

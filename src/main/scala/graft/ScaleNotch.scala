@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
+import scala.jdk.CollectionConverters._
 
 /** SELF-GENERATED 10× SCALE NOTCH (r16 verdict №1/№7): the driver's
   * largest corpus is sf0.1 (100k events / 5k docs / 2k embeddings), so
@@ -138,33 +139,6 @@ object ScaleNotch {
     }
   }
 
-  /** Streaming state telemetry: peak state rows, reported memory, and
-    * RocksDB SST bytes across a query's progress events — the numbers
-    * a capacity plan sizes executors from. */
-  private final class StateLedger
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    @volatile var maxRows = 0L
-    @volatile var maxMemBytes = 0L
-    @volatile var maxSstBytes = 0L
-    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      val ops = e.progress.stateOperators
-      maxRows = math.max(maxRows, ops.map(_.numRowsTotal).sum)
-      maxMemBytes = math.max(maxMemBytes, ops.map(_.memoryUsedBytes).sum)
-      val sst = ops.flatMap { op =>
-        import scala.jdk.CollectionConverters._
-        op.customMetrics.asScala.collect {
-          // Spark 4 RocksDB store: "rocksdbSstFileSize" (live SSTs) —
-          // match loosely so pinned/total variants count too.
-          case (k, v) if k.toLowerCase.contains("sstfile") => v.longValue()
-        }
-      }.sum
-      maxSstBytes = math.max(maxSstBytes, sst)
-    }
-  }
-
   // ------------------------------------------------------------ topology
 
   /** One full topology run (both streaming runs, through the restart)
@@ -207,8 +181,10 @@ object ScaleNotch {
     val notchMs: (String, Int) => Long = (_, a) =>
       if (a == 0) math.max(firstFireAt - System.currentTimeMillis(), 1L)
       else 300L + 100L * a
-    val ledger = new StateLedger
+    val ledger = new graft.streaming.OrderStream.ProgressLedger
     spark.streams.addListener(ledger)
+    def peak(f: graft.streaming.OrderStream.BatchProgress => Long): Long =
+      ledger.batches.asScala.map(f).maxOption.getOrElse(0L)
     def startTopology() =
       Topology.outcomeStream(spark, srcDir.toString, regDir, v1Id, v2Id,
           notchMs)
@@ -238,7 +214,7 @@ object ScaleNotch {
       require(outCount() == nImmediate,
         s"[$label] run 1 must stop with ONLY immediate routes: " +
           s"${outCount()} vs $nImmediate")
-      val maxStateRun1 = ledger.maxRows
+      val maxStateRun1 = peak(_.stateRows)
 
       // CAPACITY AUDIT of the stopped checkpoint via the State Data
       // Source (r16 verdict №7): read the RetryExecProcessor's state
@@ -334,8 +310,8 @@ object ScaleNotch {
         "restart_drain_s" -> (math.round(drainS * 10) / 10.0),
         "max_state_rows" -> maxStateRun1.toDouble,
         "state_mem_mb" ->
-          (math.round(ledger.maxMemBytes / 1e6 * 10) / 10.0),
-        "sst_mb" -> (math.round(ledger.maxSstBytes / 1e6 * 10) / 10.0),
+          (math.round(peak(_.stateMemBytes) / 1e6 * 10) / 10.0),
+        "sst_mb" -> (math.round(peak(_.sstBytes) / 1e6 * 10) / 10.0),
         "statestore_pending_rows" -> pendingRows.toDouble,
         "statestore_routed_rows" -> routedRows.toDouble,
         "checkpoint_state_mb" ->
@@ -425,7 +401,6 @@ object ScaleNotch {
     val baseSf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val spark = GraftSession.create("graft-scale-notch")
-    spark.sparkContext.setLogLevel("WARN")
     val shuffles = new ShuffleLedger
     spark.sparkContext.addSparkListener(shuffles)
 

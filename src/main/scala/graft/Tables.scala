@@ -104,6 +104,10 @@ object GraftSession {
       .config(extraConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // PlanRegressionSpec proves every unpartitioned window bounded, so
+    // WindowExec's "No Partition Defined" warning only buries the others.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", org.apache.logging.log4j.Level.ERROR)
     spark
   }
 }

@@ -38,7 +38,6 @@ object Verify {
     val sfDir = args(0); val outDir = args(1)
     val subset = args.drop(2).toSet
     val spark = GraftSession.create("graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Spark schedules jobs from concurrent submitter threads; most
     // verify queries are small, so 6-way submission keeps all cores

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * merge.
   *
   * This is the verify kernel of the PPJoin exact similarity join
-  * (Dedup.jaccardVerifySets): per candidate pair we need only the SIZE
+  * (Dedup.jaccardVerifyFromSets): per candidate pair we need only the SIZE
   * of the shingle-set intersection, but `size(array_intersect(x, y))`
   * pays for a per-row hash set build, per-element string hashing, AND
   * materializing the intersection array that `size` immediately throws

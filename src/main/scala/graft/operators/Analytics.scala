@@ -208,7 +208,7 @@ object Analytics {
     val t = Tables.events(spark, dir)
       .agg(expr("(min(ts) + max(ts)) div 2 div 1000000000").as("asof_s"))
     scd2Ranges(spark, dir)
-      .crossJoin(broadcast(t))
+      .crossJoin(t)
       .filter(col("valid_from_s") <= col("asof_s") &&
         (col("valid_to_s").isNull || col("valid_to_s") > col("asof_s")))
       .select(col("user_id"), col("event_id"), col("event_type"),
@@ -387,7 +387,7 @@ object Analytics {
       .select(col("event_type"),
         round(col("value") * 100, 0).cast("long").as("cents"), col("ts"))
     val mx = e.agg(max("ts").as("mx"))
-    val g = e.crossJoin(broadcast(mx))
+    val g = e.crossJoin(mx)
       .selectExpr("event_type", "cents",
         s"CAST((mx - ts) div ${halfLifeNs}L AS INT) AS k")
       .selectExpr("event_type", "cents",
@@ -397,7 +397,7 @@ object Analytics {
       .agg(count(lit(1)).as("n_events"), sum("cents").as("raw_cents"),
         sum("dec_cents").as("decayed_cents"))
     val tot = g.agg(sum("decayed_cents").as("td"))
-    g.crossJoin(broadcast(tot))
+    g.crossJoin(tot)
       .selectExpr("event_type", "n_events", "raw_cents", "decayed_cents",
         // DECIMAL(38) wrap before the e6 multiply (round-10 advice):
         // decayed_cents is an unbounded sum of cents — raw BIGINT*1e6
@@ -726,7 +726,7 @@ object Analytics {
       .orderBy("q").limit(100000) // integral feature domain; plan bound
       .withColumn("nl", sum("n").over(w))
       .withColumn("rl", sum("r").over(w))
-      .crossJoin(broadcast(cells.agg(sum("n").as("nt"), sum("r").as("rt"))))
+      .crossJoin(cells.agg(sum("n").as("nt"), sum("r").as("rt")))
       .filter(col("nl") < col("nt")) // top value has no right side
       .select(col("q").as("threshold"), col("nl").as("n_left"),
         (col("nt") - col("nl")).as("n_right"),
@@ -738,7 +738,7 @@ object Analytics {
           " AS BIGINT)").as("purity_milli"))
     val best = scored.agg(max(struct(col("purity_milli"),
       (-col("threshold")).as("neg_t"))).as("b"))
-    scored.crossJoin(broadcast(best))
+    scored.crossJoin(best)
       .withColumn("is_best",
         col("purity_milli") === col("b.purity_milli") &&
           col("threshold") === -col("b.neg_t"))
@@ -789,8 +789,7 @@ object Analytics {
         cells.orderBy(f).limit(100000) // integral feature domain; plan bound
           .withColumn("nl", sum("n").over(w))
           .withColumn("sl", sum("s").over(w))
-          .crossJoin(broadcast(cells.agg(sum("n").as("nt"),
-            sum("s").as("st"))))
+          .crossJoin(cells.agg(sum("n").as("nt"), sum("s").as("st")))
           .filter(col("nl") < col("nt"))
           .select(lit(f).as("feature"), col(f).as("threshold"),
             col("nl").as("n_left"), expr("nt - nl").as("n_right"),
@@ -816,7 +815,7 @@ object Analytics {
           expr("CAST(gain div 1000000000 AS BIGINT)").as("gain_e9"))
         .localCheckpoint() // 1 row
       picks = if (picks == null) pick else picks.union(pick)
-      if (rnd < rounds) rows = rows.crossJoin(broadcast(pick))
+      if (rnd < rounds) rows = rows.crossJoin(pick)
         .select(col("fq"), col("fd"),
           (col("r") - when(
             (col("feature") === "fq" && col("fq") <= col("threshold")) ||
@@ -862,14 +861,14 @@ object Analytics {
       .join(broadcast(Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey"), col("n_name"))),
+      .join(Tables.nation(spark, dir)
+        .select(col("n_nationkey"), col("n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("n_name"), col("y"))
     val grp = rows.groupBy("n_name")
       .agg(count(lit(1)).as("n_g"), sum("y").as("s_g"))
     val tot = grp.agg(sum("n_g").as("n"), sum("s_g").as("s"))
-    grp.crossJoin(broadcast(tot))
+    grp.crossJoin(tot)
       .select(col("n_name"), col("n_g"), col("s_g"),
         expr("CAST(CASE WHEN n_g <= 1 THEN" +
           " CAST(s AS DECIMAL(38,0)) * 1000000 div n ELSE" +
@@ -927,7 +926,7 @@ object Analytics {
         .withColumnRenamed("n_item", "n_a"), Seq("antecedent"))
       .join(itemCnt.withColumnRenamed("item", "consequent")
         .withColumnRenamed("n_item", "n_b"), Seq("consequent"))
-      .crossJoin(broadcast(nTab))
+      .crossJoin(nTab)
       .select(col("antecedent"), col("consequent"), col("sup"),
         col("n_a"), col("n_b"),
         expr("CAST(sup * 1000000 div n_a AS BIGINT)").as("conf_ppm"),
@@ -1026,7 +1025,7 @@ object Analytics {
         coalesce(sum(when(col("m").isNull, col("c"))), lit(0L))
           .as("orphan_rows"),
         count(when(col("m").isNull, 1)).as("orphan_keys"))
-      .join(broadcast(names), Seq("e"))
+      .join(names, Seq("e"))
       .select(col("fk_edge"), col("child_rows"), col("distinct_keys"),
         col("orphan_rows"), col("orphan_keys"))
   }
@@ -1067,7 +1066,7 @@ object Analytics {
       .agg(sum("c").as("n_rows"), count(lit(1)).as("ndv"),
         max("c").as("max_cnt"),
         expr("max_by(k, struct(c, k))").as("hot_key"))
-      .join(broadcast(names), Seq("e"))
+      .join(names, Seq("e"))
       .select(col("join_key"), col("n_rows"), col("ndv"), col("max_cnt"),
         col("hot_key"),
         expr("CAST(CAST(max_cnt AS DECIMAL(38,0)) * ndv * 1000 div n_rows" +
@@ -1106,7 +1105,7 @@ object Analytics {
       .join(o.select(col("o_orderkey")),
         col("l_orderkey") === col("o_orderkey"), "left_anti")
       .agg(count(lit(1)).as("fk_orphans"))
-    agg.crossJoin(broadcast(orphans))
+    agg.crossJoin(orphans)
       .select(explode(array(
         struct(lit("orderkey_unique").as("constraint"),
           col("dup_keys").as("violations")),

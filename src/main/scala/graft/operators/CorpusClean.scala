@@ -235,7 +235,7 @@ object CorpusClean {
       .groupBy("source").agg(count(lit(1)).as("langs_lost"))
     bySource
       .join(broadcast(sole), Seq("source"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("source"),
         (col("d") - col("d_s")).as("docs_excl"),
         (col("t") - col("t_s")).as("tokens_excl"),

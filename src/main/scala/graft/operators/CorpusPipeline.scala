@@ -113,7 +113,7 @@ object CorpusPipeline {
     val cum = Packing.withGlobalCumsum(survivors, "n_tokens", Seq("rnd", "doc_id"))
       .localCheckpoint() // feeds the sample AND the pack accounting
     val tot = cum.agg(sum("n_tokens").as("wtot"))
-    val picks = cum.crossJoin(broadcast(tot))
+    val picks = cum.crossJoin(tot)
       .selectExpr("doc_id", "n_tokens", "cum_before", s"wtot div ${k}L AS s")
       .selectExpr("doc_id", "n_tokens",
         s"least(greatest((cum_before + n_tokens - (s div 2) + s - 1) div s, 0L), ${k}L)" +

@@ -290,7 +290,7 @@ object Dedup {
 
   /** The verify stage's companion artifact: per-doc SORTED shingle
     * arrays (the document-signature layout a 100 TB run stores next to
-    * the corpus — see [[jaccardVerifySets]]), derived from the ranked
+    * the corpus — see [[jaccardVerifyFromSets]]), derived from the ranked
     * index with one groupBy at build time so no consumer re-shuffles
     * the index into arrays per query. */
   private[graft] val DocSets = graft.Indexes.Artifact("doc-sets") {
@@ -323,17 +323,10 @@ object Dedup {
     * the relational form). The sets table is one row per doc — the
     * document-signature layout a 100 TB run would store next to the
     * corpus — and joins to the pairs by doc id. Sets are sorted ONCE
-    * per doc in the aggregate so the per-pair intersection is a
+    * per doc (the prebuilt [[DocSets]] artifact: doc_id, sh sorted
+    * array, n_shingles) so the per-pair intersection is a
     * zero-allocation codegen'd merge ([[graft.functions.SortedIntersectSize]])
     * instead of `array_intersect`'s per-pair hash set. */
-  private def jaccardVerifySets(candidates: DataFrame, ex: DataFrame): DataFrame =
-    jaccardVerifyFromSets(candidates,
-      ex.groupBy("doc_id")
-        .agg(sort_array(collect_list(col("shingle"))).as("sh"),
-          count(lit(1)).as("n_shingles")))
-
-  /** Same verify over a PREBUILT (doc_id, sh sorted array, n_shingles)
-    * sets table — the persisted-artifact face ([[DocSets]]). */
   private def jaccardVerifyFromSets(candidates: DataFrame, sets: DataFrame): DataFrame = {
     candidates
       .join(sets.select(col("doc_id").as("doc_i"), col("sh").as("sh_i"),
@@ -1130,7 +1123,7 @@ object Dedup {
       lit(900000L).as("m1"), lit(900000L).as("m2"), lit(900000L).as("m3"),
       lit(100000L).as("u1"), lit(100000L).as("u2"), lit(100000L).as("u3"))
     for (_ <- 1 to rounds) {
-      val w = cells.crossJoin(broadcast(params))
+      val w = cells.crossJoin(params)
         .withColumn("num", expr(
           "CAST(p AS DECIMAL(38,0))" +
             " * (CASE WHEN gt = 1 THEN m1 ELSE 1000000 - m1 END)" +

@@ -10,9 +10,8 @@ import graft.Tables
   * underneath the stream surface.
   *
   * Scale notes baked into each query:
-  * - dimension tables (region/nation/supplier/part/customer) are joined
-  *   with an explicit `broadcast()` hint — at 100 TB the fact tables
-  *   shuffle-partition on their keys while dims replicate;
+  * - dims replicate while fact tables shuffle-partition on their keys:
+  *   supplier/part/customer by a `broadcast()` pin, nation/region by size;
   * - all aggregations are partial-agg friendly (sum/count/min/max), so
   *   the shuffle carries group keys only;
   * - money math is exact integer arithmetic (cents / 1e-4 / 1e-6 units)
@@ -86,7 +85,7 @@ object OlapQueries {
   def q5RevenueByNation(spark: SparkSession, dir: String): DataFrame = {
     val region = Tables.region(spark, dir).filter(col("r_name") === "ASIA")
     val nation = Tables.nation(spark, dir)
-      .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
+      .join(region, col("n_regionkey") === col("r_regionkey"))
       .select("n_nationkey", "n_name")
     val supp = Tables.supplier(spark, dir).select("s_suppkey", "s_nationkey")
     val cust = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
@@ -101,7 +100,7 @@ object OlapQueries {
       .join(cust,
         col("o_custkey") === col("c_custkey") &&
           col("c_nationkey") === col("s_nationkey"))
-      .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
+      .join(nation, col("s_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
       .agg(sum("rev_e4").as("rev_e4"), count(lit(1)).as("lineitem_count"))
       .select(col("n_name"),
@@ -131,7 +130,7 @@ object OlapQueries {
     perPart
       .withColumn("part_rank", row_number().over(w))
       .filter(col("part_rank") <= 3)
-      .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
+      .join(nation, col("s_nationkey") === col("n_nationkey"))
       .select(col("n_name"), col("l_partkey"),
         (col("rev_e4").cast("double") / 10000.0).as("revenue"),
         col("part_rank"))
@@ -172,8 +171,8 @@ object OlapQueries {
       .join(broadcast(supp), col("l_suppkey") === col("s_suppkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(cust, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(nation.as("ns")), col("s_nationkey") === col("ns.n_nationkey"))
-      .join(broadcast(nation.as("nc")), col("c_nationkey") === col("nc.n_nationkey"))
+      .join(nation.as("ns"), col("s_nationkey") === col("ns.n_nationkey"))
+      .join(nation.as("nc"), col("c_nationkey") === col("nc.n_nationkey"))
       .filter(
         (col("ns.n_name") === wanted.head && col("nc.n_name") === wanted(1)) ||
           (col("ns.n_name") === wanted(1) && col("nc.n_name") === wanted.head))
@@ -257,7 +256,7 @@ object OlapQueries {
       .groupBy("l_partkey").agg(sum(revenueE4).as("part_rev_e4"))
     val total = Tables.lineitem(spark, dir)
       .agg(sum(revenueE4).as("total_rev_e4"))
-    perPart.join(broadcast(total))
+    perPart.join(total)
       .filter(col("part_rev_e4") * 2000 > col("total_rev_e4"))
       .select(col("l_partkey"),
         (col("part_rev_e4").cast("double") / 10000.0).as("part_revenue"))
@@ -300,7 +299,7 @@ object OlapQueries {
         balCents.as("bal_cents"))
     val posAvg = cust.filter(col("bal_cents") > 0)
       .agg(sum("bal_cents").as("sum_pos"), count(lit(1)).as("n_pos"))
-    cust.join(broadcast(posAvg))
+    cust.join(posAvg)
       .filter(col("bal_cents") * col("n_pos") > col("sum_pos"))
       .join(Tables.orders(spark, dir)
           .filter(col("o_orderdate") >= to_timestamp_ntz(lit("2001-01-01")))
@@ -367,7 +366,7 @@ object OlapQueries {
       .join(broadcast(Tables.supplier(spark, dir)
         .select("s_suppkey", "s_name", "s_nationkey")),
         col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name")),
+      .join(Tables.nation(spark, dir).select("n_nationkey", "n_name"),
         col("s_nationkey") === col("n_nationkey"))
       .select(col("l_partkey"), col("s_name"), col("n_name"),
         (col("offer_cents").cast("double") / 100.0).as("best_price"))
@@ -383,7 +382,7 @@ object OlapQueries {
       .groupBy("l_suppkey")
       .agg(sum(revenueE4).as("total_rev_e4"))
     val top = rev.agg(max("total_rev_e4").as("max_rev_e4"))
-    rev.join(broadcast(top), col("total_rev_e4") === col("max_rev_e4"))
+    rev.join(top, col("total_rev_e4") === col("max_rev_e4"))
       .join(broadcast(Tables.supplier(spark, dir).select("s_suppkey", "s_name")),
         col("l_suppkey") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"),
@@ -440,9 +439,9 @@ object OlapQueries {
     val nation = Tables.nation(spark, dir)
     val region = Tables.region(spark, dir).filter(col("r_name") === "ASIA")
     val asiaCust = Tables.customer(spark, dir).select("c_custkey", "c_nationkey")
-      .join(broadcast(nation
-          .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
-          .select(col("n_nationkey").as("cn_key"))),
+      .join(nation
+          .join(region, col("n_regionkey") === col("r_regionkey"))
+          .select(col("n_nationkey").as("cn_key")),
         col("c_nationkey") === col("cn_key"), "left_semi")
       .select("c_custkey")
     val ord = Tables.orders(spark, dir)
@@ -455,7 +454,7 @@ object OlapQueries {
       .join(broadcast(Tables.supplier(spark, dir)
         .select("s_suppkey", "s_nationkey")),
         col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(nation.select("n_nationkey", "n_name")),
+      .join(nation.select("n_nationkey", "n_name"),
         col("s_nationkey") === col("n_nationkey"))
       .groupBy("o_year")
       .agg(
@@ -486,7 +485,7 @@ object OlapQueries {
       .join(broadcast(Tables.supplier(spark, dir)
         .select("s_suppkey", "s_nationkey")),
         col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name")),
+      .join(Tables.nation(spark, dir).select("n_nationkey", "n_name"),
         col("s_nationkey") === col("n_nationkey"))
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("n_name").as("nation"), col("o_year"))
@@ -527,7 +526,7 @@ object OlapQueries {
       .select("l_suppkey").distinct()
     Tables.supplier(spark, dir)
       .join(dominant, col("s_suppkey") === col("l_suppkey"), "left_semi")
-      .join(broadcast(Tables.nation(spark, dir).select("n_nationkey", "n_name")),
+      .join(Tables.nation(spark, dir).select("n_nationkey", "n_name"),
         col("s_nationkey") === col("n_nationkey"))
       .select("s_suppkey", "s_name", "n_name")
   }
@@ -1063,11 +1062,11 @@ object OlapQueries {
         .select(col("c_custkey"), col("c_nationkey")),
         col("o_custkey") === col("c_custkey"))
       .groupBy("c_nationkey").agg(sum("cents").as("revenue_cents"))
-      .join(broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))),
+      .join(Tables.nation(spark, dir)
+        .select(col("n_nationkey"), col("n_name"), col("n_regionkey")),
         col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(Tables.region(spark, dir)
-        .select(col("r_regionkey"), col("r_name"))),
+      .join(Tables.region(spark, dir)
+        .select(col("r_regionkey"), col("r_name")),
         col("n_regionkey") === col("r_regionkey"))
       .select(col("r_name").as("region"), col("n_name").as("nation"),
         col("revenue_cents"))
@@ -1078,7 +1077,7 @@ object OlapQueries {
     val tot = byNation.agg(sum("revenue_cents").as("grand_total"))
     byNation
       .withColumn("region_total", sum("revenue_cents").over(wRegion))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .selectExpr("region", "nation", "revenue_cents",
         // DECIMAL(38) wrap: revenue_cents is an unbounded cents sum.
         "CAST(CAST(revenue_cents AS DECIMAL(38,0)) * 1000000" +

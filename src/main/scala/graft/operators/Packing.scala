@@ -173,8 +173,6 @@ object Packing {
     * assignment never needs a global order. */
   def inferenceBatchPlan(spark: SparkSession, dir: String,
       batchSize: Int = 32): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("bucket").orderBy("rnd", "doc_id")
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(split(lower(col("text")), "\\s+")).cast("long").as("n_tokens"),
@@ -252,7 +250,7 @@ object Packing {
         coalesce(sum(col("b.cnt")), lit(0L)).as("offset"))
     val nSrc = srcCounts.agg(count(lit(1)).as("n_sources"))
     ranked.join(broadcast(srcIdx), "source")
-      .crossJoin(broadcast(nSrc))
+      .crossJoin(nSrc)
       .select(col("doc_id"), col("source"), col("n_tokens"),
         (col("cum_before") - col("offset")).as("rank_in_source"),
         expr("(cum_before - offset) * n_sources + src_idx")
@@ -445,7 +443,7 @@ object Packing {
         .as("rank"))
     val tot = ranked.agg(count(lit(1)).as("s_total"))
     ranked.groupBy("rank").agg(count(lit(1)).as("n_seqs"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("rank"), col("n_seqs"),
         expr("n_seqs * 1000000 div s_total").as("share_ppm"),
         expr(s"n_seqs * 1000000 div s_total - 1000000 div $world")

@@ -31,7 +31,7 @@ object Profiling {
     val totals = ev.agg(count(lit(1)).as("total"))
     ev.join(broadcast(candidates), "item")
       .groupBy("item").agg(count(lit(1)).as("n_events"))
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       .filter(col("n_events") > col("total").cast("double") / k)
       .select("item", "n_events")
   }
@@ -449,7 +449,7 @@ object Profiling {
         col("cnt").as("bcnt"))), col("bpid") < col("pid"), "left")
       .groupBy("pid")
       .agg(coalesce(sum("bcnt"), lit(0L)).as("off"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("pid"), col("off"), col("n"))
     val localW = Window.partitionBy("pid").orderBy(col(valueCol), col(keyCol))
     ranged
@@ -856,7 +856,7 @@ object Profiling {
       buckets: Int = 10): DataFrame = {
     val cum = scoreCum(spark, dir)
     val tot = cum.agg(sum("n").as("total"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .selectExpr("score_cents", "n", "n_pos",
         s"CAST(($buckets * cum_before) div total AS INT) AS bucket")
       .groupBy("bucket")
@@ -916,7 +916,7 @@ object Profiling {
   def brierCalibrated(spark: SparkSession, dir: String): DataFrame = {
     val cum = scoreCum(spark, dir)
     val tot = cum.agg(sum("n").as("total"))
-    val rows = cum.crossJoin(broadcast(tot))
+    val rows = cum.crossJoin(tot)
       .selectExpr("n", "n_pos",
         "CAST((10 * cum_before) div total AS INT) AS bucket")
     val iso = isotonicCalibration(spark, dir)
@@ -960,7 +960,7 @@ object Profiling {
     val ev = Tables.events(spark, dir)
       .select(col("user_id"), expr(s"ts div ${day}L").as("d"))
     val span = ev.agg(min("d").as("lo"), max("d").as("hi"))
-    val counted = ev.crossJoin(broadcast(span))
+    val counted = ev.crossJoin(span)
       .selectExpr("user_id",
         "CASE WHEN d < (lo + hi + 1) div 2 THEN 0 ELSE 1 END AS period")
       .groupBy("user_id", "period").agg(count(lit(1)).as("cnt"))
@@ -1003,7 +1003,7 @@ object Profiling {
     val tot = cum.agg(sum("n").as("total"), sum("n_pos").as("p_total"))
     Packing.withGlobalCumsums(cum, Seq("n_pos" -> "cumpos_before"),
         Seq("score_cents"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .selectExpr("score_cents", "cum_before",
         s"CAST(($buckets * cum_before) div total AS INT) AS bucket",
         "total - cum_before AS n_ge",
@@ -1174,7 +1174,7 @@ object Profiling {
       sum(col("key_rows")).as("n_rows"),
       count(lit(1)).as("n_keys"))
     cnt.orderBy(col("key_rows").desc, col("l_partkey")).limit(10)
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       .select(col("l_partkey"), col("key_rows"),
         expr("CAST(CAST(key_rows AS DECIMAL(38,0)) * key_rows AS BIGINT)")
           .as("key_pairs"),
@@ -1214,7 +1214,7 @@ object Profiling {
     keys.groupBy("l_partkey").agg(count(lit(1)).as("cnt"))
       .agg(sum(expr("CAST(cnt AS DECIMAL(38,0)) * cnt")).as("exact_f2"),
         sum("cnt").as("n_rows"), count(lit(1)).as("n_keys"))
-      .crossJoin(broadcast(est))
+      .crossJoin(est)
       .selectExpr("CAST(est_f2 AS BIGINT) AS est_f2",
         "CAST(exact_f2 AS BIGINT) AS exact_f2",
         "CAST(est_f2 - exact_f2 AS BIGINT) AS overcount",
@@ -1282,7 +1282,7 @@ object Profiling {
     cells
       .join(broadcast(rows), "lang")
       .join(broadcast(cols), "source")
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("lang"), col("source"), col("obs"),
         col("row_tot"), col("col_tot"),
         // DECIMAL(38) product before the integral divide (HUGEINT //
@@ -1393,7 +1393,7 @@ object Profiling {
     groups.crossJoin(broadcast(segs))
       .join(cells, Seq("c_nationkey", "bal_bucket", "c_mktsegment"), "left")
       .na.fill(0L, Seq("n_gs"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .groupBy("c_nationkey", "bal_bucket", "n_g", "n")
       .agg(sum(expr("abs(CAST(n_gs AS DECIMAL(38,0)) * n" +
         " - CAST(n_s AS DECIMAL(38,0)) * n_g)")).as("num"))
@@ -1442,7 +1442,7 @@ object Profiling {
           "CAST(c_custkey AS STRING))), 1, 8), 16, 10) AS BIGINT)").as("h1"),
         expr("CAST(conv(substr(md5(concat('graft-rr-', " +
           "CAST(c_custkey AS STRING))), 9, 8), 16, 10) AS BIGINT)").as("h2"))
-      .crossJoin(broadcast(kTab))
+      .crossJoin(kTab)
       .withColumn("sub_idx", expr("h2 % k"))
       .join(broadcast(segIdx.withColumnRenamed("c_mktsegment", "sub_seg")),
         Seq("sub_idx"))
@@ -1457,7 +1457,7 @@ object Profiling {
     val total = cells.agg(sum("n_cell").as("n"))
     trueCnt.join(obsCnt, Seq("c_mktsegment"), "full_outer")
       .na.fill(0L, Seq("n_true", "n_obs"))
-      .crossJoin(broadcast(kTab)).crossJoin(broadcast(total))
+      .crossJoin(kTab).crossJoin(total)
       .select(col("c_mktsegment"), col("n_true"), col("n_obs"),
         // est can be negative (a segment nobody reports); sign-split
         // so Spark trunc-div and DuckDB floor-div agree.
@@ -1518,8 +1518,8 @@ object Profiling {
       .join(broadcast(Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey"), col("n_name"))),
+      .join(Tables.nation(spark, dir)
+        .select(col("n_nationkey"), col("n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
       .agg(count(lit(1)).as("n_true"),
@@ -1561,7 +1561,7 @@ object Profiling {
       .groupBy("digit").agg(count(lit(1)).as("n"))
     val tot = obs.agg(sum("n").as("total"))
     expected.join(obs, Seq("digit"), "left")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("digit"), coalesce(col("n"), lit(0L)).as("n"),
         expr("CAST(coalesce(n, 0) * 1000000 div total AS BIGINT)")
           .as("obs_ppm"),
@@ -1579,8 +1579,8 @@ object Profiling {
       .join(broadcast(Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey"), col("n_name"))),
+      .join(Tables.nation(spark, dir)
+        .select(col("n_nationkey"), col("n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name").agg(count(lit(1)).as("n_true"))
       .select(col("n_name"), col("n_true"),

@@ -187,7 +187,7 @@ object Ranking {
       val nt = tgt.agg(sum("ct").as("nt"))
       raw.join(tgt, Seq("w"), "left_outer")
         .na.fill(0L, Seq("ct"))
-        .crossJoin(broadcast(nr)).crossJoin(broadcast(nt))
+        .crossJoin(nr).crossJoin(nt)
         .select(col("w"),
           expr("CAST(1000000 AS DECIMAL(38,0)) * ct * nr" +
             " div (CAST(cr AS DECIMAL(38,0)) * nt)").as("rw"))
@@ -249,7 +249,7 @@ object Ranking {
     val nTypes = bcnt.agg(count(lit(1)).as("n_types"))
     bcnt.orderBy(col("cxy").desc, col("xy")).limit(k)
       .join(left, "x").join(cont, "y")
-      .crossJoin(broadcast(nTypes))
+      .crossJoin(nTypes)
       .select(col("xy"), col("cxy"), col("c1x"), col("n1p_x"),
         col("cont_y"), col("n_types"),
         expr("CAST(((4 * CAST(cxy AS DECIMAL(38,0)) - 3) * n_types" +
@@ -338,7 +338,7 @@ object Ranking {
           .as("w6"),
         (col("v1") - col("v")).as("dv"))
       .groupBy("channel").agg(sum(expr("w6 * dv")).as("num6"))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .crossJoin(broadcast(
         vsum.filter(col("s") === 7).select(col("v").as("v_all"))))
       .crossJoin(broadcast(
@@ -432,7 +432,7 @@ object Ranking {
     val nodes = und.select(col("src").as("node")).distinct()
       .localCheckpoint()
     val nn = nodes.agg(count(lit(1)).as("nn"))
-    var mass = nodes.crossJoin(broadcast(nn))
+    var mass = nodes.crossJoin(nn)
       .select(col("node"), expr(s"$MassTotal div nn").as("mass"))
     for (_ <- 0 until rounds) {
       // Per-round checkpoint + broadcast pins (r19 — the
@@ -447,7 +447,7 @@ object Ranking {
         .select(col("dst"),
           expr("(mass div ow) * w + ((mass % ow) * w) div ow").as("c"))
         .groupBy("dst").agg(sum("c").as("inm"))
-      val next = nodes.crossJoin(broadcast(nn))
+      val next = nodes.crossJoin(nn)
         .join(broadcast(in), col("node") === col("dst"), "left")
         .select(col("node"),
           (expr("85 * coalesce(inm, 0L) div 100") +

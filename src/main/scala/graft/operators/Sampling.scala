@@ -65,7 +65,7 @@ object Sampling {
       .withColumn("weight_micro",
         floor(sqrt(col("n_docs").cast("double")) * 1000000.0 + 0.5).cast("long"))
     val total = counts.agg(sum("weight_micro").as("total_micro"))
-    counts.join(broadcast(total))
+    counts.join(total)
       .select(col("lang"), col("n_docs"), col("weight_micro"),
         (col("weight_micro").cast("double") / col("total_micro"))
           .as("sample_share"))
@@ -103,7 +103,7 @@ object Sampling {
     // g(x) = #points below x = floor((x − off + s − 1) / s) clamped to
     // [0, k]; operands stay non-negative so truncating `div` == floor
     // on both engines. n_picks = g(cum + w) − g(cum).
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .selectExpr("doc_id", "w", "cum_before",
         s"wtot div ${k}L AS s")
       .selectExpr("doc_id", "w", "cum_before",
@@ -149,7 +149,7 @@ object Sampling {
     // to meet k rows.
     broadcast(ppsSampleOf(docs.select("doc_id", "w", "rnd"), k))
       .join(docs.select("doc_id", "chars"), "doc_id")
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(
         expr(s"CAST(n_picks AS DECIMAL(38,0)) * chars * wtot" +
           s" div (${k}L * n_tokens)").as("term"),
@@ -177,7 +177,6 @@ object Sampling {
     * corpus sizes. */
   def mixAllocation(spark: SparkSession, dir: String,
       budget: Long = 100000L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // Checkpointed (r19): |sources| rows; the total and the quota
     // projection both re-ran the corpus tokenize without it (and
     // mixEpochs inherits the same single pass).
@@ -187,7 +186,7 @@ object Sampling {
       .groupBy("source").agg(sum("n").as("n_tokens"))
       .localCheckpoint()
     val total = toks.agg(sum("n_tokens").as("w"))
-    val quotas = toks.crossJoin(broadcast(total))
+    val quotas = toks.crossJoin(total)
       .select(col("source"), col("n_tokens"),
         expr(s"CAST($budget AS DECIMAL(38,0)) * n_tokens div w").as("quota"),
         expr(s"CAST(CAST($budget AS DECIMAL(38,0)) * n_tokens % w AS BIGINT)")
@@ -207,7 +206,7 @@ object Sampling {
         "left")
       .groupBy("source", "n_tokens", "quota")
       .agg((count(col("b_source")) + 1).as("rk"))
-    rk.crossJoin(broadcast(leftover))
+    rk.crossJoin(leftover)
       .select(col("source"), col("n_tokens"), col("quota"),
         when(col("rk") <= col("l"), 1L).otherwise(0L).as("extra"))
       .withColumn("alloc", col("quota") + col("extra"))
@@ -304,13 +303,13 @@ object Sampling {
     val purchasedInPool = spark.read
       .parquet(GraphOps.PurchaseGraph.path(spark, dir))
       .select(col("c").as("cust"), col("p").as("p_partkey"))
-      .join(broadcast(pool.select("p_partkey")), Seq("p_partkey"), "left_semi")
+      .join(pool.select("p_partkey"), Seq("p_partkey"), "left_semi")
       // Pool-bounded (|purchases ∩ pool| rows); consumed by the anti
       // join's broadcast build — materialized so the build is a copy,
       // not a re-run of the graph-scan semi join.
       .localCheckpoint()
     val w = Window.partitionBy("cust").orderBy(col("h"), col("p_partkey"))
-    users.crossJoin(broadcast(pool))
+    users.crossJoin(pool)
       .join(broadcast(purchasedInPool), Seq("cust", "p_partkey"), "left_anti")
       .withColumn("h0", expr("hc ^ (hp * 8191L)"))
       .withColumn("h", expr("h0 ^ shiftright(h0, 17)"))

@@ -755,7 +755,7 @@ object Similarity {
         .groupBy("ci")
         .agg(sum(expr("CAST(c AS DECIMAL(38,0)) * v")).as("u"))
       val m = u.agg(max(abs(col("u"))).as("m"))
-      v = u.crossJoin(broadcast(m))
+      v = u.crossJoin(m)
         .select(col("ci").as("vj"),
           expr("CASE WHEN m = 0 THEN CAST(0 AS DECIMAL(38,0))" +
             " WHEN u >= 0 THEN u * 1000000 div m" +
@@ -912,8 +912,7 @@ object Similarity {
     val cell = assign.groupBy("cluster")
       .agg(sum(when(col("vec_id") % 2 === 0, 1L).otherwise(0L)).as("na"),
         sum(when(col("vec_id") % 2 =!= 0, 1L).otherwise(0L)).as("nb"))
-    cell.crossJoin(broadcast(cell.agg(sum("na").as("ta"),
-        sum("nb").as("tb"))))
+    cell.crossJoin(cell.agg(sum("na").as("ta"), sum("nb").as("tb")))
       .select(col("cluster"), col("na"), col("nb"),
         expr("na * 1000000 div ta").as("share_a_ppm"),
         expr("nb * 1000000 div tb").as("share_b_ppm"),
@@ -985,7 +984,7 @@ object Similarity {
     val absMax = e.agg(greatest(max(aggregate(col("embedding"), lit(0.0),
       (acc, x) => greatest(acc, abs(x.cast("double"))))), lit(1e-30))
       .as("absmax"))
-    val qv = e.crossJoin(broadcast(absMax))
+    val qv = e.crossJoin(absMax)
       .select(col("vec_id"),
         transform(col("embedding"), x =>
           floor(x.cast("double") * (lit(127.0) / col("absmax")) + lit(0.5))
@@ -1006,7 +1005,7 @@ object Similarity {
         .localCheckpoint() // 1 row
       picks = picks.union(pick)
       if (r < k) state = state
-        .crossJoin(broadcast(pick.select(col("c").as("nc"))))
+        .crossJoin(pick.select(col("c").as("nc")))
         .select(col("vec_id"), col("q"),
           least(col("dmin"), graft.functions.L2Sq(col("q"), col("nc")))
             .as("dmin"))
@@ -1033,7 +1032,7 @@ object Similarity {
     val absMax = e.agg(greatest(max(aggregate(col("embedding"), lit(0.0),
       (acc, x) => greatest(acc, abs(x.cast("double"))))), lit(1e-30))
       .as("absmax"))
-    val qv = e.crossJoin(broadcast(absMax))
+    val qv = e.crossJoin(absMax)
       .select(col("vec_id"),
         transform(col("embedding"), x =>
           floor(x.cast("double") * (lit(127.0) / col("absmax")) + lit(0.5))

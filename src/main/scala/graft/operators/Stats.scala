@@ -174,7 +174,7 @@ object Stats {
       "one", Seq("g_chars", "g_doc"))
       .select(col("cum_before").as("grk0"), col("g_chars").as("norm_chars"))
     val total = docs.agg(count(lit(1)).as("nt"))
-    grouped.crossJoin(broadcast(total))
+    grouped.crossJoin(total)
       .withColumn("g", expr("CAST(CASE WHEN n = 1 THEN (nt - 1) div 2 " +
         "ELSE (CAST(rk0 AS DECIMAL(38,0)) * (nt - 1)) div (n - 1) END AS BIGINT)"))
       .join(global, col("g") === col("grk0"))
@@ -215,7 +215,7 @@ object Stats {
     // (The per-row D needs n1/n2 on every row, so unlike wilcoxon/MW
     // the crossJoin itself cannot fuse away.)
     val totals = cum2.agg(sum("c1").as("n1"), sum("c2").as("n2"))
-    cum2.crossJoin(broadcast(totals))
+    cum2.crossJoin(totals)
       .select(col("n1"), col("n2"),
         abs((col("cb1") + col("c1")) * col("n2") -
           (col("cb2") + col("c2")) * col("n1")).as("d"))
@@ -284,7 +284,6 @@ object Stats {
     * 1-row total. */
   def neymanAllocation(spark: SparkSession, dir: String,
       budget: Long = NeymanBudget): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val per = Tables.documents(spark, dir)
       .select(col("source"), col("n_chars").as("x"))
       .groupBy("source")
@@ -305,7 +304,7 @@ object Stats {
       // quotas table below feeds two more consumers).
       .localCheckpoint()
     val total = per.agg(sum("w").as("wt"))
-    val quotas = per.crossJoin(broadcast(total))
+    val quotas = per.crossJoin(total)
       .select(col("source"), col("n"), col("w"),
         expr(s"CAST($budget AS DECIMAL(38,0)) * w div wt").as("quota"),
         expr(s"CAST(CAST($budget AS DECIMAL(38,0)) * w % wt AS BIGINT)")
@@ -324,7 +323,7 @@ object Stats {
         "left")
       .groupBy("source", "n", "w", "quota")
       .agg((count(col("b_source")) + 1).as("rk"))
-    rk.crossJoin(broadcast(leftover))
+    rk.crossJoin(leftover)
       .select(col("source"), col("n"), col("w"), col("quota"),
         when(col("rk") <= col("l"), 1L).otherwise(0L).as("extra"))
       .withColumn("alloc", col("quota") + col("extra"))
@@ -400,7 +399,7 @@ object Stats {
     monthly
       .withColumn("n1", count(lit(1)).over(w))
       .withColumn("s1", sum("rev").over(w))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       // minimum segment length: an unconstrained argmax degenerates to
       // isolating a single outlier month (observed: the partial final
       // month) — the standard changepoint guard
@@ -488,7 +487,7 @@ object Stats {
     // aggregate, not a cheap count+sum.
     val tot = users.agg(count(lit(1)).as("n_users_total"),
       sum("cents").as("rev_total"))
-    val byDecile = ranked.crossJoin(broadcast(tot))
+    val byDecile = ranked.crossJoin(tot)
       .selectExpr("cents", "rev_total",
         s"CAST(($buckets * rank_before) div n_users_total AS INT) AS decile")
       .groupBy("decile")
@@ -528,7 +527,7 @@ object Stats {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     // Drift term scaled by n: n·x_t − S − n·slack, slack = 2% of the
     // mean (2·S div 100 div n, folded exactly as n·slack = S div 50).
-    val p = daily.crossJoin(broadcast(tot))
+    val p = daily.crossJoin(tot)
       .selectExpr("day", "x", "n", "s",
         "CAST(n AS DECIMAL(38,0)) * x - s - s div 50 AS drift")
       .withColumn("pref", sum("drift").over(wCum))
@@ -538,7 +537,7 @@ object Stats {
         "CAST(pref - minpref AS DECIMAL(38,0)) AS s_t")
     // Alarm when S_t (in n-scaled cents) exceeds h = n · 25% of mean
     // daily revenue ≡ s div 4.
-    p.crossJoin(broadcast(tot.select(col("s").as("s2"))))
+    p.crossJoin(tot.select(col("s").as("s2")))
       .selectExpr("day", "x AS total_cents",
         "CAST(s_t div n AS BIGINT) AS cusum_cents",
         "s_t > CAST(s2 AS DECIMAL(38,0)) div 4 AS alarm")
@@ -695,7 +694,7 @@ object Stats {
     // Second (tiny) checkpoint kept: without it the as-of broadcast
     // and the crossJoin projection re-run once per consumer (the 1-row
     // count + the first rank pass).
-    val cust = perCust.crossJoin(broadcast(asOf))
+    val cust = perCust.crossJoin(asOf)
       .select(col("o_custkey"), (col("as_of") - col("last_day")).as("rec"),
         col("freq"), col("monetary"), lit(1L).as("one"))
       .localCheckpoint()
@@ -707,7 +706,7 @@ object Stats {
       else in.withColumn("k", -col(metric))
       Packing.withGlobalCumsums(keyed, Seq("one" -> "rb"),
           Seq("k", "o_custkey"))
-        .crossJoin(broadcast(n))
+        .crossJoin(n)
         .withColumn(out, expr("5 - CAST((5 * rb) div n_cust AS INT)"))
         .drop("k", "rb", "n_cust")
     }
@@ -738,7 +737,7 @@ object Stats {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     lifetimes
       .withColumn("n_surviving", sum("n_at").over(wSuffix))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .selectExpr("life_weeks AS k_weeks", "n_surviving",
         "n_surviving * 1000000 div n_users AS share_ppm")
   }
@@ -871,7 +870,7 @@ object Stats {
         sum(expr("x * yy")).as("sxy"), sum(expr("x * x")).as("sxx"))
       .selectExpr("sy * sxx - sx * sxy AS a_num",
         "n * sxy - sx * sy AS b_num", "n * sxx - sx * sx AS d")
-    val withPred = monthly.crossJoin(broadcast(fit))
+    val withPred = monthly.crossJoin(fit)
       .withColumn("n_x", expr("a_num + b_num * CAST(mo AS DECIMAL(38,0))"))
       .withColumn("res_scaled",
         expr("abs(CAST(y AS DECIMAL(38,0)) * d - n_x)"))
@@ -884,7 +883,7 @@ object Stats {
     // a plan bound, not a semantic one — if the calendar ever outgrows
     // it, rk === k would match nothing and the query would silently
     // return 0 rows, so the bound fails loudly instead (ADVICE r11).
-    val qTab = cal.crossJoin(broadcast(kTab))
+    val qTab = cal.crossJoin(kTab)
       .filter(assert_true(col("n_cal") <= lit(1000),
         concat(lit("graft conformalInterval: "), col("n_cal"),
           lit(" calibration rows > plan bound 1000 — raise the" +
@@ -895,7 +894,7 @@ object Stats {
         org.apache.spark.sql.expressions.Window.orderBy("res_scaled")))
       .filter(col("rk") === col("k"))
       .select(col("res_scaled").as("q_scaled"))
-    withPred.crossJoin(broadcast(qTab))
+    withPred.crossJoin(qTab)
       .select(col("mo"), col("y"),
         (col("mo") % 2 === 1).as("is_cal"),
         expr("CAST(CASE WHEN n_x >= 0 THEN n_x * 1000000 div d" +
@@ -1044,7 +1043,7 @@ object Stats {
     pairs.orderBy(col("slope_micro"), col("mi"), col("mj")).limit(10000)
       .withColumn("rk", row_number().over(
         Window.orderBy(col("slope_micro"), col("mi"), col("mj"))))
-      .crossJoin(broadcast(pTab))
+      .crossJoin(pTab)
       // Loud bound (ADVICE r11): if |pairs| ever exceeded the plan
       // bound, the median rank could point past the truncated set and
       // the statistic would be silently wrong — fail instead.
@@ -1053,7 +1052,7 @@ object Stats {
           lit(" slope pairs > plan bound 10000 — raise the TakeOrdered" +
             " limit with the calendar"))).isNull)
       .filter(col("rk") === expr("(n_pairs + 1) div 2"))
-      .crossJoin(broadcast(ols))
+      .crossJoin(ols)
       .select(col("n_months"), col("n_pairs"),
         col("slope_micro").as("theil_sen_micro"), col("ols_micro"))
   }
@@ -1102,7 +1101,7 @@ object Stats {
         sum(expr("CAST(c AS DECIMAL(38,0)) * two_mr")).as("two_r"))
       .localCheckpoint()
     val tot = vals.agg(sum("t").as("n"), tieCubes("t").as("ties"))
-    val h = grp.crossJoin(broadcast(tot))
+    val h = grp.crossJoin(tot)
       .select(expr("CAST(two_r * two_r * 3000" +
         " div (CAST(n AS DECIMAL(38,0)) * (n + 1) * n_j) AS DECIMAL(38,0))")
         .as("term"), col("n"), col("ties"))
@@ -1218,7 +1217,7 @@ object Stats {
     val k = cells.agg(countDistinct("priority").as("k"))
     cells
       .withColumn("n_in_block", count(lit(1)).over(Window.partitionBy("mo")))
-      .crossJoin(broadcast(k))
+      .crossJoin(k)
       .filter(col("n_in_block") === col("k"))
       .withColumn("rnk", rank().over(
         Window.partitionBy("mo").orderBy("y")))
@@ -1335,7 +1334,7 @@ object Stats {
         expr("CAST(CASE WHEN ssw <= 0 OR k <= 1 OR n <= k THEN 0 ELSE" +
           " ssb * (n - k) * 1000 div (ssw * (k - 1)) END AS BIGINT)")
           .as("f_milli"))
-    g.crossJoin(broadcast(tot))
+    g.crossJoin(tot)
       .select(col("priority"),
         expr("CAST(n_j AS BIGINT)").as("n_j"),
         expr("CAST(s_j * 1000 div n_j AS BIGINT)").as("mean_cents_milli"),
@@ -1439,7 +1438,7 @@ object Stats {
       .agg(sum("cents").as("x"), count(lit(1)).as("y"))
     val tot = per.agg(sum("x").as("sx"), sum("y").as("sy"),
       count(lit(1)).as("n"))
-    val reps = per.crossJoin(broadcast(tot))
+    val reps = per.crossJoin(tot)
       .select(col("n"), col("sx"), col("sy"),
         expr("CAST((CAST(sx AS DECIMAL(38,0)) - x) * 1000 div (sy - y)" +
           " AS DECIMAL(38,0))").as("m"))
@@ -1582,7 +1581,7 @@ object Stats {
       .rowsBetween(Window.unboundedPreceding, -1)
     val maxMo = monthly.agg(max("mo").as("max_mo"),
       count(lit(1)).as("n_mo"))
-    monthly.crossJoin(broadcast(maxMo))
+    monthly.crossJoin(maxMo)
       // Loud bound (ADVICE r11 pattern): truncation would silently
       // corrupt the prefix sums every fit reads — fail instead.
       .filter(assert_true(col("n_mo") <= lit(10000),
@@ -1785,7 +1784,7 @@ object Stats {
         expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
     val rng = ev.agg(min("ts").as("mn"), max("ts").as("mx"))
       .selectExpr("(mn + mx) div 2 AS cutoff")
-    val per = ev.crossJoin(broadcast(rng))
+    val per = ev.crossJoin(rng)
       .groupBy("user_id")
       .agg(sum(when(col("ts") < col("cutoff"), col("cents"))
           .otherwise(0L)).as("x"),
@@ -1973,7 +1972,7 @@ object Stats {
         sum("y1term").as("s1"), sum("y0term").as("s0"),
         sum("nt").as("ntt"), sum(expr("n - nt")).as("ncc"),
         sum("syt").as("st"), sum("syc").as("sc"))
-      .crossJoin(broadcast(pruned))
+      .crossJoin(pruned)
       .selectExpr("n_used", "n_strata_used", "n_pruned",
         "CAST(s1 div n_used AS BIGINT) AS ey1_micro",
         "CAST(s0 div n_used AS BIGINT) AS ey0_micro",
@@ -2000,7 +1999,7 @@ object Stats {
         expr("CAST(round(value * 100, 0) AS BIGINT)").as("cents"))
     val rng = ev.agg(min("ts").as("mn"), max("ts").as("mx"))
       .selectExpr("(mn + mx) div 2 AS cutoff")
-    ev.crossJoin(broadcast(rng))
+    ev.crossJoin(rng)
       .groupBy("user_id")
       .agg(
         sum(when(col("ts") < col("cutoff"), 1L).otherwise(0L))
@@ -2066,8 +2065,8 @@ object Stats {
       .join(broadcast(Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_nationkey"))),
         col("o_custkey") === col("c_custkey"))
-      .join(broadcast(Tables.nation(spark, dir)
-        .select(col("n_nationkey"), col("n_name"))),
+      .join(Tables.nation(spark, dir)
+        .select(col("n_nationkey"), col("n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy("n_name")
       .agg(count(lit(1)).cast("decimal(38,0)").as("n1"),
@@ -2079,7 +2078,7 @@ object Stats {
       .localCheckpoint()
     val tot = per.agg(sum("n1").as("nt"), sum("s1").as("st"),
       sum("q1").as("qt"))
-    per.crossJoin(broadcast(tot))
+    per.crossJoin(tot)
       .select(col("n_name"), col("n1"), col("s1"), col("q1"),
         expr("nt - n1").as("n2"), expr("st - s1").as("s2"),
         expr("qt - q1").as("q2"))
@@ -2141,14 +2140,14 @@ object Stats {
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window
           .orderBy(col("t2_milli").desc, col("n_name"))))
-      .join(broadcast(thr), "rk")
+      .join(thr, "rk")
       // Checkpointed (r19): ≤25 post-aggregate rows (the unpartitioned
       // rank window above is bounded by the same invariant), consumed
       // by BOTH k_max and the final stamp — each re-ran nationT2.
       .localCheckpoint()
     val kMax = ranked.filter(col("t2_milli") >= col("thr_milli"))
       .agg(coalesce(max("rk"), lit(0)).as("k_max"))
-    ranked.crossJoin(broadcast(kMax))
+    ranked.crossJoin(kMax)
       .select(col("n_name"), col("n_group"), col("t2_milli"),
         col("rk"), col("thr_milli"),
         (col("rk") <= col("k_max")).as("sig_bh"))
@@ -2201,7 +2200,7 @@ object Stats {
       .agg(sum(when(col("yr") === 1995, 1L).otherwise(0L)).as("n95"),
         sum(when(col("yr") === 1996, 1L).otherwise(0L)).as("n96"))
     val tot = b.agg(sum("n95").as("t95"), sum("n96").as("t96"))
-    b.crossJoin(broadcast(tot))
+    b.crossJoin(tot)
       .agg(max("t95").as("n_1995"), max("t96").as("n_1996"),
         count(lit(1)).as("n_buckets"),
         sum(expr("abs(n95 * 1000000 div t95 - n96 * 1000000 div t96)"))

@@ -95,7 +95,7 @@ object TextAnalysis {
     // the broadcast vocab, count(*) vs count(hit) — tokenization (the
     // dominant cost at corpus scale) runs twice total (vocab + this),
     // not three times.
-    tok.join(broadcast(vocab), Seq("tok"), "left")
+    tok.join(vocab, Seq("tok"), "left")
       .agg(count(lit(1)).as("total_tokens"),
         count(col("hit")).as("covered_tokens"))
       .select(col("total_tokens"), col("covered_tokens"),
@@ -138,7 +138,7 @@ object TextAnalysis {
       .withColumn("covered_tokens", col("cum_before") + col("cnt"))
     val total = v.agg(sum("cnt").as("total_tokens"))
     cum.filter(expr("(rank & (rank - 1)) = 0"))
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("rank"), col("cnt"), col("covered_tokens"),
         col("total_tokens"),
         expr("CAST(1000000 * CAST(covered_tokens AS DECIMAL(38,0))" +
@@ -447,7 +447,7 @@ object TextAnalysis {
     val nTot = wTot.agg(sum("cw").as("nn"))
     sw.join(wTot, "w")
       .join(broadcast(nS), "source")
-      .crossJoin(broadcast(nTot))
+      .crossJoin(nTot)
       .groupBy("source")
       .agg(max("ns").as("n_tokens"), max("vocab_size").as("vocab_size"),
         max("nn").as("nn"),
@@ -483,10 +483,9 @@ object TextAnalysis {
     val tok = docs.select(col("doc_id"), explode(tokens).as("token"))
     // Checkpointed: df AND the score join both consume tf, and without
     // the materialization each re-runs the tokenize+explode+aggregate
-    // kernel over the whole corpus (2× the dominant cost). Both
-    // downstream joins carry explicit broadcast hints, so the
-    // stats-stripping checkpoint cannot flip them to SMJ (the
-    // jaccardPairs negative does not apply).
+    // kernel over the whole corpus (2× the dominant cost). The df join
+    // carries an explicit broadcast hint, so the checkpoint cannot flip
+    // it to SMJ (the jaccardPairs negative does not apply).
     val tf = tok.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
       .localCheckpoint()
     val df = tf.groupBy("token").agg(count(lit(1)).as("df"))
@@ -494,7 +493,7 @@ object TextAnalysis {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy(col("score_e6").desc, col("token"))
     tf.join(broadcast(df), "token")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(col("doc_id"), col("token"), col("tf"), col("df"),
         // DECIMAL(38) wrap: tf × |corpus docs| × 1e6 clears int64.
         expr("CAST(CAST(tf AS DECIMAL(38,0)) * n_docs * 1000000" +
@@ -817,7 +816,7 @@ object TextAnalysis {
       val best = pairs.orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1).localCheckpoint()
       words = words
-        .crossJoin(broadcast(best.select(col("l").as("bl"), col("r").as("br"))))
+        .crossJoin(best.select(col("l").as("bl"), col("r").as("br")))
         .select(expr(
           "replace(s, ' ' || bl || '  ' || br || ' ', ' ' || bl || br || ' ')")
           .as("s"), col("cnt"))
@@ -966,8 +965,8 @@ object TextAnalysis {
       .filter(length(col("xw")) >= 1 && length(col("yw")) >= 1)
       .join(uni.select(col("x").as("xw"), col("cx")), "xw")
       .join(uni.select(col("x").as("yw"), col("cx").as("cy")), "yw")
-      .crossJoin(broadcast(nTot))
-      .crossJoin(broadcast(mTot))
+      .crossJoin(nTot)
+      .crossJoin(mTot)
       .select(col("xy"), col("cxy"), col("cx"), col("cy"),
         expr("CAST(cxy AS DECIMAL(38,0)) * n * n * 1000000" +
           " div (CAST(m AS DECIMAL(38,0)) * cx * cy)").as("pmi_micro"))
@@ -1035,7 +1034,7 @@ object TextAnalysis {
     // into the broadcast-nested-loop join CONDITION via the score > 0
     // pushdown (the exact regression class PlanRegressionSpec guards —
     // it caught this one).
-    perDoc.crossJoin(broadcast(stats))
+    perDoc.crossJoin(stats)
       .select(col("doc_id"), col("len"),
         graft.functions.OptimizerBarrier(
           round(contribs.reduceLeft(_ + _), 6)).as("score"))
@@ -1084,7 +1083,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"), explode(tokens).as("w"))
     val total = vocab.agg(sum("cnt").as("nn"))
     words.join(vocab, "w")
-      .crossJoin(broadcast(total))
+      .crossJoin(total)
       .select(col("doc_id"), col("lang"),
         expr("CAST(1000000 AS DECIMAL(38,0)) * nn div cnt").as("inv_p"))
       .groupBy("doc_id", "lang")
@@ -1201,7 +1200,7 @@ object TextAnalysis {
     tc.groupBy("bin")
       .agg(count(lit(1)).as("n_vocab"), sum("cnt").as("n_occ"),
         max("cnt").as("max_tok_occ"))
-      .crossJoin(broadcast(tc.agg(sum("cnt").as("tot"))))
+      .crossJoin(tc.agg(sum("cnt").as("tot")))
       .select(col("bin"), col("n_vocab"), col("n_occ"),
         expr("n_occ * 1000000 div tot").as("occ_share_ppm"),
         expr("max_tok_occ * 1000000 div n_occ").as("dominance_ppm"))

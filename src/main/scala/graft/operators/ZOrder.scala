@@ -182,7 +182,7 @@ object ZOrder {
         col("l_partkey"), col("l_suppkey"), lit(1L).as("one")))
     val perFile = Packing
       .withGlobalCumsum(both, "one", Seq("layout", "code"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(stats)
       // 'hilbert' sorts before 'zorder', so zorder ranks start at n.
       .select(col("layout"),
         expr("(cum_before - if(layout = 'zorder', n, 0L)) div rpf").as("file"),

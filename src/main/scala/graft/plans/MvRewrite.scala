@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -64,8 +63,6 @@ object MvCatalog {
   }
 
   def contains(name: String): Boolean = entries.containsKey(name)
-
-  def deregister(name: String): Unit = entries.remove(name)
 
   /** Drop every entry under `prefix` except `keep` — the staleness
     * half of the corpus-fingerprint contract (verdict r12 №3): when a

@@ -6,7 +6,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsWrite, TableCapability}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The WRITE half of the DSv2 connector seam: `graft.sink` is a
   * writable table whose writers count what they receive and whose

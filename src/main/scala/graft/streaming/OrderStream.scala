@@ -909,11 +909,12 @@ object OrderStream {
 
   /** One observed micro-batch: what the ops dashboard ingests. */
   final case class BatchProgress(queryName: String, batchId: Long,
-      numInputRows: Long, stateRows: Long)
+      numInputRows: Long, stateRows: Long, stateMemBytes: Long, sstBytes: Long)
 
   /** Streaming OBSERVABILITY seam: a `StreamingQueryListener` that
     * turns per-batch progress events into a queryable in-memory ledger
-    * — batch id, exact input row counts, state-store row counts. The
+    * — batch id, exact input row counts, state rows, memory and SST bytes
+    * (summed over state operators; what capacity plans size from). The
     * consumer-lag/throughput dashboard every production stream runs
     * (the reference's console metrics, as a structured feed); at real
     * scale the ledger append is a metrics-bus emit, the listener code
@@ -929,12 +930,16 @@ object OrderStream {
 
     override def onQueryStarted(e: QueryStartedEvent): Unit =
       starts.incrementAndGet()
-    override def onQueryProgress(e: QueryProgressEvent): Unit =
-      batches.add(BatchProgress(
-        Option(e.progress.name).getOrElse(""),
-        e.progress.batchId,
-        e.progress.numInputRows,
-        e.progress.stateOperators.map(_.numRowsTotal).sum))
+    override def onQueryProgress(e: QueryProgressEvent): Unit = {
+      import scala.jdk.CollectionConverters._
+      val ops = e.progress.stateOperators
+      // RocksDB's "rocksdbSstFileSize" and its variants; 0 on other stores.
+      val sst = ops.flatMap(_.customMetrics.asScala.collect {
+        case (k, v) if k.toLowerCase.contains("sstfile") => v.longValue() }).sum
+      batches.add(BatchProgress(Option(e.progress.name).getOrElse(""),
+        e.progress.batchId, e.progress.numInputRows, ops.map(_.numRowsTotal).sum,
+        ops.map(_.memoryUsedBytes).sum, sst))
+    }
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
       stops.incrementAndGet()
   }

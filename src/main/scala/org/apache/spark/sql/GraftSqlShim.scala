@@ -31,4 +31,7 @@ object GraftSqlShim {
   def convertedExpression(
       c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Deliver every posted listener event (`listenerBus` is private[spark]). */
+  def drainListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
 }

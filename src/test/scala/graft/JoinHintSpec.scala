@@ -70,4 +70,45 @@ class JoinHintSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
     }
   }
+
+  test("a one-row total broadcasts by size at every SF; a grouped side's estimate grows") {
+    // Why the operators leave one-row and fixed-size sides unhinted:
+    // the planner's estimate of a global aggregate is one row of its
+    // output, before and after localCheckpoint (which keeps the origin
+    // estimate), so it stays under the threshold at any data size. A
+    // grouped aggregate's estimate scales with its input, which is why
+    // the pins on grouped sides stay.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    def estimate(df: DataFrame): BigInt =
+      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    case class AtSf(fact: DataFrame, total: DataFrame, totalEst: BigInt,
+        checkpointedEst: BigInt, groupedEst: BigInt)
+    val Seq(small, large) = Seq("/root/testdata/sf0.001",
+        "/root/testdata/sf0.01").map { d =>
+      val fact = Tables.lineitem(spark, d)
+      val total = fact.agg(sum("l_quantity").as("total_qty"))
+      val grouped = fact.groupBy("l_suppkey").agg(sum("l_quantity").as("qty"))
+      // The grouped side as an equi-join sees it.
+      val groupedSide = fact.join(grouped, "l_suppkey").queryExecution
+        .optimizedPlan.collectFirst { case a: Aggregate => a }.get
+      AtSf(fact, total, estimate(total), estimate(total.localCheckpoint()),
+        groupedSide.stats.sizeInBytes)
+    }
+    assert(small.totalEst == large.totalEst &&
+      small.checkpointedEst == large.checkpointedEst,
+      s"total estimates differ across SFs: $small vs $large")
+    assert(large.totalEst < threshold && large.checkpointedEst < threshold)
+    assert(large.groupedEst > small.groupedEst * 5, "grouped estimate did " +
+      s"not grow with the data: ${small.groupedEst} -> ${large.groupedEst}")
+
+    val joins = large.fact.crossJoin(large.total).queryExecution.sparkPlan
+      .collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.size == 1 && joins.head.buildSide == BuildRight &&
+      joins.head.right.output.map(_.name) == Seq("total_qty"),
+      s"unhinted crossJoin(total) did not broadcast the total: $joins")
+  }
 }

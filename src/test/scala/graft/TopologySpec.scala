@@ -325,6 +325,12 @@ class TopologySpec extends AnyFunSuite with BeforeAndAfterAll {
       val maxState = ledger.batches.asScala.map(_.stateRows).max
       assert(maxState >= nEvents / 2,
         s"state never reached scale: max stateRows $maxState")
+      // The ledger's capacity figures are filled from the same events:
+      // RocksDB reports its memory and its live SST bytes.
+      val maxMem = ledger.batches.asScala.map(_.stateMemBytes).max
+      val maxSst = ledger.batches.asScala.map(_.sstBytes).max
+      assert(maxMem > 0 && maxSst > 0,
+        s"state memory/SST bytes not reported: $maxMem / $maxSst")
       // throughput datapoint for §6 (not asserted — host-dependent):
       info(f"10k-event topology: $elapsedS%.1f s end-to-end, " +
         f"${nEvents / elapsedS}%.0f events/s, max state rows $maxState")
